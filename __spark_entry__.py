@@ -640,14 +640,69 @@ _SPATIAL_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
 }
 
 #: Driver-budget ordering (VERDICT r02 item 1): the driver verifies
-#: registry entries IN ORDER with a ~50-query budget. Round-6 window
-#: (VERDICT r05 item 2): the 18 entries whose latest driver row is r04
-#: (skipped by the r05 budget, unchanged since) come FIRST, then every
-#: entry whose plan changed this round (optimizations are
-#: result-identical by construction, but the driver should re-prove
-#: that, not trust it); long-green r05 repeats fill the tail.
+#: registry entries IN ORDER with a ~50-query budget. Rotation: every
+#: entry whose plan changed with the dedup.bucket_pairs rework comes
+#: FIRST (result-identical by construction, but the driver should
+#: re-prove that, not trust it); then the entries the previous order
+#: left past the budget; the entries the previous order put first
+#: (re-proved then, unchanged since) fill the tail.
 _VERIFY_FIRST = [
-    # --- stale since r04 (rotation, VERDICT r05 item 2 / missing #1)
+    # --- plan changed: candidate pairs through dedup.bucket_pairs
+    "minhash_band_candidates",  # bucket cap read from sig metadata
+    "minhash_verified_dups",    # same candidates + verify_jaccard
+    "ngram_jaccard_pairs",      # cold-shingle buckets, cap=50
+    "simhash_near_pairs",       # blocks with fingerprint payload
+    "simhash_pigeonhole_pairs",  # blocks with fp payload, cap=50
+    "embedding_cosine_dups",    # calls cosine_near_pairs_lsh directly
+    "embedding_cosine_dups_lsh",  # i < j bucket expansion
+    # --- past the budget in the previous order
+    "scan_filter_project",
+    "coalesce_upper",
+    "id_prefix",
+    "boundary_predicate",
+    "filler_filter",
+    "anti_join",
+    "semi_join",
+    "unusable_anti_join",
+    "hierarchy_join",
+    "mapping_override",
+    "first_match",
+    "tile_clip_areas",
+    "pip_assignment",
+    "pip_tile_rollup",
+    "ann_ivf_probe_topk",
+    "repetition_stats",
+    # --- unchanged, verified in the previous order's budget window
+    "lang_quality",
+    "rand_indicators",
+    "problem_url",
+    "ann_lsh_topk",
+    "multimodal_features",
+    "poly_export",
+    "shapefile_source",
+    "cell_tile_stats",
+    "streaming_tile_counts",
+    "streaming_dedup",
+    "incremental_manifest",
+    "table_snapshots",
+    "knn_cellring",
+    "byte_identity_audit",
+    "problems_routing",
+    "knn_topk_flat",
+    "dissolve_parents",
+    "residual_holes",
+    "simplify_mesh_stats",
+    "dual_export",
+    "zip_package_counts",
+    "topojson_arc_stats",
+    "dedup_exact",
+    "token_stats",
+    # --- rows-only residue: keep their rows fresh every round (their
+    # oracle-backed siblings cover the checkable semantics)
+    "topojson_export",
+    "zip_package_manifest",
+    "ann_ivf_topk",
+    # --- first in the previous order: re-proved then, unchanged since
     "ann_cosine_topk",
     "case_bucket",
     "date_trunc_hourly",
@@ -666,51 +721,6 @@ _VERIFY_FIRST = [
     "topk",
     "union_bag",
     "window_running",
-    # --- plan changed in round 6 (optimization rework; see
-    # OPTIMIZATION_r06.md — outputs proven identical vs the same
-    # oracles, re-verify under the driver gate)
-    "minhash_band_candidates",  # grouped signatures, join-free plan
-    "minhash_verified_dups",    # + array-intersect verify_jaccard
-    "ngram_jaccard_pairs",      # array-intersect exact Jaccard
-    "embedding_cosine_dups",    # regime dispatch -> LSH path
-    "embedding_cosine_dups_lsh",  # shares the dispatched plan
-    "dedup_exact",              # spread_input scan
-    "token_stats",              # spread_input scan
-    # --- r05-green, unchanged: fill the budget tail
-    "lang_quality",
-    "simhash_pigeonhole_pairs",
-    "rand_indicators",
-    "problem_url",
-    "ann_lsh_topk",
-    "multimodal_features",
-    "poly_export",
-    "shapefile_source",
-    "simhash_near_pairs",
-    "cell_tile_stats",
-    "streaming_tile_counts",
-    "streaming_dedup",
-    "incremental_manifest",
-    "table_snapshots",
-    "knn_cellring",
-    "byte_identity_audit",
-    "problems_routing",
-    "knn_topk_flat",
-    "dissolve_parents",
-    "residual_holes",
-    "simplify_mesh_stats",
-    "dual_export",
-    "zip_package_counts",
-    "topojson_arc_stats",
-    "tile_clip_areas",
-    "pip_assignment",
-    "pip_tile_rollup",
-    "ann_ivf_probe_topk",
-    "repetition_stats",
-    # --- rows-only residue: keep their rows fresh every round (their
-    # oracle-backed siblings cover the checkable semantics)
-    "topojson_export",
-    "zip_package_manifest",
-    "ann_ivf_topk",
 ]
 
 

@@ -292,27 +292,10 @@ def lsh_topk(vectors: DataFrame, queries_pdf: pd.DataFrame, k: int,
 def cosine_near_pairs(vectors: DataFrame, threshold: float,
                       id_col: str = "vec_id", emb_col: str = "emb",
                       n_proj: int = 2,
-                      max_cell_size: int | None = None,
-                      dim: int | None = None,
-                      n_planes: int | None = None,
-                      n_tables: int = 8, seed: int = SEED) -> DataFrame:
+                      max_cell_size: int | None = None) -> DataFrame:
     """EXACT cosine near-duplicate self-join via grid blocking — the
     embedding-space member of the dedup family (exact / minhash /
     simhash / ngram live in dedup.py+relops.py).
-
-    Regime auto-dispatch (r06, closes VERDICT r05's one perf-weak):
-    pass `dim` and the function checks whether the grid can prune at
-    all before committing to the exact plan. For near-isotropic unit
-    vectors the per-axis projection spread is ~1/sqrt(dim); once the
-    cell width w = sqrt(2 - 2*threshold) reaches that spread
-    (w * sqrt(dim) >= 1), essentially every vector lands in the same
-    handful of cells and the "blocked" join degenerates to all-pairs —
-    the r05 ANN bench measured 129s for just 9.6k vectors at
-    dim=64/threshold=0.99. In that regime the call is FORWARDED to
-    cosine_near_pairs_lsh (same (id_a, id_b, cos_sim) contract, exact
-    verify, recall-controlled candidates; hash-matched against the
-    same brute-force DuckDB oracle). Callers that omit `dim` keep the
-    exact grid unconditionally (low-dim geometry, oracle harnesses).
 
     For unit-normalized vectors and ANY unit direction d,
     |d.a - d.b| <= ||a - b|| = sqrt(2 - 2 cos(a, b)), so every pair at
@@ -331,16 +314,19 @@ def cosine_near_pairs(vectors: DataFrame, threshold: float,
     K smallest ids per cell (dedup.cap_k_smallest semantics) when
     bounded work matters more than exhaustive pair listing.
 
+    The grid stops pruning on high-dim near-isotropic vectors: the
+    per-axis projection spread is ~1/sqrt(dim), so once
+    w * sqrt(dim) >= 1 nearly every vector shares a handful of cells
+    and the join approaches all-pairs (measured 129s for 9.6k vectors
+    at dim=64/threshold=0.99). The result stays exact there; callers
+    who accept recall-controlled candidates call cosine_near_pairs_lsh
+    instead.
+
     `emb_col` must be array<double>; rows with zero norm are dropped
     (cosine undefined). Returns (id_a, id_b, cos_sim) with id_a < id_b,
     cos_sim unrounded.
     """
     w = math.sqrt(max(2.0 - 2.0 * threshold, 0.0)) * 1.000001 + 1e-12
-    if dim is not None and w * math.sqrt(dim) >= 1.0:
-        return cosine_near_pairs_lsh(
-            vectors, threshold, vectors.sparkSession, dim,
-            id_col=id_col, emb_col=emb_col, n_planes=n_planes,
-            n_tables=n_tables, seed=seed)
     norm = F.expr(
         f"sqrt(aggregate({emb_col}, CAST(0.0 AS DOUBLE),"
         " (acc, v) -> acc + v * v))"
@@ -451,9 +437,8 @@ def cosine_near_pairs_lsh(vectors: DataFrame, threshold: float,
     bucket groupBy reuses — deliberately NOT the minhash hot-only
     two-phase form; see the in-function comment for the measured A/B
     and why that shape doesn't transfer here. Buckets pair in-JVM from
-    bounded
-    collect_list arrays (no fact-fact self-join), pairs are
-    de-duplicated across tables BEFORE the exact verify, and the
+    bounded arrays (dedup.bucket_pairs, no fact-fact self-join), pairs
+    are de-duplicated across tables BEFORE the exact verify, and the
     verify joins embeddings back by id as SHUFFLE-HASH joins (a merge
     join would sort the array-payload-wide intermediate — the 10x
     bench's dominant cost; a broadcast build is the Catalyst-
@@ -509,19 +494,9 @@ def cosine_near_pairs_lsh(vectors: DataFrame, threshold: float,
     postings = dedup.cap_k_smallest(
         postings, ["_table", "_sig"], id_col, max_bucket_size)
 
-    # bounded in-JVM pair expansion: bucket -> sorted id array ->
-    # i<j combinations. max_bucket_size bounds the quadratic term.
-    buckets = postings.groupBy("_table", "_sig").agg(
-        F.array_sort(F.collect_list(id_col)).alias("_ids"))
-    pairs = (
-        buckets.filter(F.size("_ids") >= 2)
-        .select(F.explode(F.expr(
-            "filter(flatten(transform(_ids,"
-            " a -> transform(_ids, b -> struct(a AS id_a, b AS id_b)))),"
-            " p -> p.id_a < p.id_b)")).alias("_p"))
-        .select("_p.id_a", "_p.id_b")
-        .dropDuplicates(["id_a", "id_b"])  # a pair can hit many tables
-    )
+    # the window above already bounds every bucket at max_bucket_size
+    pairs = dedup.bucket_pairs(postings, ["_table", "_sig"], id_col,
+                               cap=max_bucket_size)
 
     # verify joins are SHUFFLE-HASH, not sort-merge: join-1's output
     # rows carry a dim-sized embedding array, and a merge join-2 would

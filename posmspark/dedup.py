@@ -4,20 +4,25 @@ additions; no posm counterpart — SURVEY.md training-data section).
 Five dedup families, all shuffle-disciplined for 100 TB inputs:
 - exact           : content-hash groupBy (relops.q_dedup_exact, oracle'd)
 - minhash_lsh     : shingle -> per-band min-hash signature -> band-bucket
-                    join (relops.q_minhash_band_candidates, oracle'd);
+                    pairs (relops.q_minhash_band_candidates, oracle'd);
                     this module adds the signature builder + verify pass
 - simhash         : 64-bit sign-sum fingerprint; near-dups = fingerprints
-                    within Hamming distance k, bucketed by band rotation
-- ngram_jaccard   : shingle-join exact Jaccard (relops, oracle'd)
+                    within Hamming distance k, bucketed by pigeonhole
+                    blocks
+- ngram_jaccard   : cold-shingle pairs + exact Jaccard (relops, oracle'd)
 - embedding_cosine: near-dup pairs by cosine >= tau via LSH buckets
                     (ann.py provides the bucketing)
 
-Scale notes: every candidate generator is an equi-join on a derived
-key (band signature / rotation prefix) — never a cross join; verify
-passes run only on candidate pairs. Hot keys (boilerplate shingles,
-exact-duplicate fingerprint buckets) are capped by SAMPLING the K
-smallest doc ids per key — a capped key still pairs its K
-representatives (dropping the key outright blind-spotted whole
+Scale notes: every candidate generator is ONE primitive,
+bucket_pairs(df, key_cols, id_col, cap): all id pairs sharing a derived
+key (band signature / block value / shingle / LSH bucket), never a
+cross join; verify passes run only on candidate pairs. When a bucket
+bound K is known, buckets pair in-JVM from one sorted K-element array
+(no join); when it is not, they pair through a streaming sort-merge
+self-join, so no bucket ever becomes one unbounded array. Hot keys
+(boilerplate shingles, exact-duplicate fingerprint buckets) are capped
+by SAMPLING the K smallest doc ids per key — a capped key still pairs
+its K representatives (dropping the key outright blind-spotted whole
 clusters larger than K, ADVICE r02). Pipeline ordering matters: run
 EXACT content-hash dedup first (q_dedup_exact) so identical docs
 collapse to one representative before near-dup candidate generation;
@@ -89,10 +94,11 @@ def shingle_hash_arrays(df: DataFrame, text_col: str = "text", n: int = 3,
 def cap_k_smallest(df: DataFrame, key_cols: list[str], id_col: str,
                    k: int) -> DataFrame:
     """Keep only the k smallest id_col values per key — THE hot-key
-    skew cap, shared by every consumer (simhash bucket cap, the
-    pigeonhole oracle query; minhash_signatures applies the same rule
-    through its hot-only two-phase form) so the Spark semantics and the
-    DuckDB oracle replicas can never drift apart (review r03)."""
+    skew cap as a spillable window (the cosine LSH bucket cap, the
+    exact cosine grid's cell cap). bucket_pairs(cap=k) and
+    minhash_signatures apply the same rule as a sorted-array slice, so
+    the Spark semantics and the DuckDB oracle replicas (row_number <= k)
+    can never drift apart (review r03)."""
     from pyspark.sql import Window
 
     w = Window.partitionBy(*key_cols).orderBy(id_col)
@@ -105,8 +111,7 @@ def cap_k_smallest(df: DataFrame, key_cols: list[str], id_col: str,
 def minhash_signatures(sh: DataFrame, n_bands: int = 8,
                        id_col: str = "doc_id",
                        max_shingle_freq: int | None = None,
-                       portable_hash: bool = False,
-                       cap_shards: int | None = None) -> DataFrame:
+                       portable_hash: bool = False) -> DataFrame:
     """(doc_id, band, sig): per-band minimum of a salted shingle hash.
 
     max_shingle_freq is the skew guard: each shingle keeps only its K
@@ -117,7 +122,12 @@ def minhash_signatures(sh: DataFrame, n_bands: int = 8,
     behavior) keeps K representatives of every large cluster pairable;
     the residual blind spot is a doc beyond the K smallest ids of ALL
     its shingles, which is why exact content-hash dedup runs FIRST in a
-    production pipeline (module docstring).
+    production pipeline (module docstring). K is recorded as the `sig`
+    column's `bucket_cap` metadata: a (band, sig) bucket is the docs
+    sharing one minimizing shingle, which at most K docs kept, so
+    lsh_candidate_pairs reads the bound from its input and pairs
+    buckets in-JVM; uncapped signatures carry no bound and pair through
+    the streaming join.
 
     portable_hash=True uses min(md5(band || '|' || shingle)) — byte-
     identical in DuckDB, so the whole LSH+verify path is oracle-
@@ -137,14 +147,7 @@ def minhash_signatures(sh: DataFrame, n_bands: int = 8,
     distinct_shingles x bands; measured 94x fewer at the bench corpus).
     This replaces the r03 shape's four extra operators (hot-count agg,
     broadcast anti-join, hot-row window sort, union) with one grouped
-    pass: bench 13.2s -> 5.3s at 50k docs on local[32]. The groupBy
-    partial-merge state is one doc-id list per shingle; at corpora
-    where a boilerplate shingle's doc-frequency times 8 bytes could
-    stress executor memory, pass cap_shards=S to insert a salted
-    pre-cap level (exact: the k smallest of a union are the k smallest
-    of the per-shard k-smallest), bounding state at max(df/S, S*k) ids
-    per group. Off by default — the extra exchange costs ~2x at bench
-    scale and both driver scale factors are nowhere near the regime.
+    pass: bench 13.2s -> 5.3s at 50k docs on local[32].
     """
     if portable_hash:
         def band_hash(b):
@@ -155,22 +158,10 @@ def minhash_signatures(sh: DataFrame, n_bands: int = 8,
             return F.xxhash64(F.lit(b), F.col("shingle"))
     if max_shingle_freq is not None:
         k = max_shingle_freq
-        if cap_shards:
-            l1 = (
-                sh.groupBy("shingle",
-                           F.pmod(F.xxhash64(id_col),
-                                  F.lit(cap_shards)).alias("_cs"))
-                .agg(F.slice(F.sort_array(F.collect_list(id_col)), 1, k)
-                     .alias("_ds")))
-            grp = (
-                l1.groupBy("shingle")
-                .agg(F.slice(F.sort_array(F.flatten(F.collect_list("_ds"))),
-                             1, k).alias("_ds")))
-        else:
-            grp = (
-                sh.groupBy("shingle")
-                .agg(F.slice(F.sort_array(F.collect_list(id_col)), 1, k)
-                     .alias("_ds")))
+        grp = (
+            sh.groupBy("shingle")
+            .agg(F.slice(F.sort_array(F.collect_list(id_col)), 1, k)
+                 .alias("_ds")))
         # band hashes evaluate in the Project BELOW the Generate —
         # once per distinct shingle, not per exploded (doc, shingle) row
         per_sh = grp.select(
@@ -178,48 +169,94 @@ def minhash_signatures(sh: DataFrame, n_bands: int = 8,
             F.explode("_ds").alias(id_col))
         per_doc = per_sh.groupBy(id_col).agg(
             *[F.min(f"_m{b}").alias(f"_s{b}") for b in range(n_bands)])
+        sig_meta = {"bucket_cap": k}
     else:
         # uncapped path (callers with pre-bounded corpora): one
         # map-side-combinable groupBy(doc) pass, n_bands exprs per row
         per_doc = sh.groupBy(id_col).agg(
             *[F.min(band_hash(b)).alias(f"_s{b}") for b in range(n_bands)])
+        sig_meta = {}
     kb = F.explode(F.array(*[
         F.struct(F.lit(b).alias("band"), F.col(f"_s{b}").alias("sig"))
         for b in range(n_bands)
     ])).alias("kb")
     return per_doc.select(id_col, kb).select(
-        id_col, F.col("kb.band").alias("band"), F.col("kb.sig").alias("sig"))
+        id_col, F.col("kb.band").alias("band"),
+        F.col("kb.sig").alias("sig", metadata=sig_meta))
 
 
-def lsh_candidate_pairs(sigs: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Docs sharing any band signature -> distinct candidate pairs.
+def bucket_pairs(df: DataFrame, key_cols: list[str], id_col: str,
+                 cap: int | None = None,
+                 payload_cols: tuple[str, ...] = ()) -> DataFrame:
+    """Distinct (id_a, id_b, <p>_a, <p>_b, ...) rows with id_a < id_b,
+    one for every pair of rows that agree on all key_cols — the one
+    candidate-pair expansion of the near-duplicate family (minhash band
+    buckets, simhash blocks, ngram shingles, cosine LSH buckets). Each
+    id appears at most once per bucket; payload_cols travel with their
+    id to both sides of the pair (e.g. the fingerprint a verify needs).
 
-    r06 shape: ONE groupBy(band, sig) + bounded in-JVM combination
-    expansion (the shape q_ngram_jaccard_pairs proved in r05), replacing
-    the sort-merge self-join — which exchanged AND sorted the signature
-    table twice and needed a merge hint to stop Catalyst building a
-    multi-GB broadcast from a bad size estimate. Result-identical: a
-    bucket {d1 < d2 < ...} emits exactly the (a < b) pairs the
-    self-join's a.id < b.id condition produced, and .distinct() dedups
-    across bands the same way. Bucket doc lists are bounded by the
-    signature cap (sig = min over the doc's surviving shingles, and a
-    capped shingle survives in at most K docs, so at most K docs can
-    share the minimizing shingle): collect_list state and the expanded
-    C(K,2) combination array are both O(K^2) per bucket, never M^2.
+    cap=K (bucket size known to be bounded, or to be sampled down):
+    ONE groupBy(key_cols) — each bucket keeps its K smallest rows by id
+    via slice(sort_array(collect_list(...)), 1, K), the same rule as
+    cap_k_smallest — and the i < j combinations expand in-JVM from that
+    sorted array. One exchange and no join; per-bucket state and
+    expansion are O(K) and O(K^2).
+
+    cap=None (bucket size unknown): a merge-hinted sort-merge equi
+    self-join on key_cols with a.id < b.id. Sort-merge streams buckets
+    of any size, so no single row or aggregation buffer ever holds a
+    whole bucket — an uncapped exact-duplicate cluster of M docs costs
+    O(M^2) output rows, never one M-element (or C(M,2)-element) array.
     """
+    names = ["id", *payload_cols]
+    if cap is None:
+        a = df.alias("_a").hint("merge")  # fact-fact: never broadcast
+        b = df.alias("_b")
+        cond = [F.col(f"_a.{k}") == F.col(f"_b.{k}") for k in key_cols]
+        cond.append(F.col(f"_a.{id_col}") < F.col(f"_b.{id_col}"))
+        cols = [id_col, *payload_cols]
+        return a.join(b, cond).select(*[
+            F.col(f"_{s}.{c}").alias(f"{n}_{s}")
+            for c, n in zip(cols, names) for s in "ab"]).distinct()
+    if payload_cols:
+        elem = F.struct(F.col(id_col).alias("id"), *payload_cols)
+        pick = "{v}.{n}"
+    else:  # bare ids collect as a primitive array, no struct per element
+        elem = F.col(id_col)
+        pick = "{v}"
+    named = ", ".join(f"'{n}_{s}', " + pick.format(v=v, n=n)
+                      for n in names for s, v in (("a", "x"), ("b", "y")))
     bkt = (
-        sigs.groupBy("band", "sig")
-        .agg(F.sort_array(F.collect_list(id_col)).alias("_ds"))
-        .filter(F.size("_ds") > 1)
+        df.groupBy(*key_cols)
+        .agg(F.slice(F.sort_array(F.collect_list(elem)), 1, cap)
+             .alias("_ms"))
+        .filter(F.size("_ms") > 1)
     )
     return (
         bkt.select(F.explode(F.expr(
-            "flatten(transform(_ds, (x, i) ->"
-            " transform(slice(_ds, i + 2, size(_ds)),"
-            " y -> named_struct('id_a', x, 'id_b', y))))")).alias("p"))
-        .select("p.id_a", "p.id_b")
+            "flatten(transform(_ms, (x, i) ->"
+            " transform(slice(_ms, i + 2, size(_ms)),"
+            f" y -> named_struct({named}))))")).alias("_p"))
+        .select("_p.*")
         .distinct()
     )
+
+
+def lsh_candidate_pairs(sigs: DataFrame, id_col: str = "doc_id") -> DataFrame:
+    """Docs sharing any band signature -> distinct (id_a, id_b)
+    candidate pairs, id_a < id_b (bucket_pairs over (band, sig)).
+
+    The bucket bound comes from the input, not from an option: capped
+    signatures (minhash_signatures(max_shingle_freq=K)) carry K as the
+    `sig` column's `bucket_cap` metadata and pair in-JVM — the
+    join-free grouped plan; the slice can bind only on a band-hash
+    collision between two different minimizing shingles. Signatures
+    without the bound (uncapped, or built elsewhere) take the streaming
+    sort-merge self-join, so an exact-duplicate cluster of any size
+    never lands in one aggregation buffer.
+    """
+    cap = sigs.schema["sig"].metadata.get("bucket_cap")
+    return bucket_pairs(sigs, ["band", "sig"], id_col, cap=cap)
 
 
 def verify_jaccard(pairs: DataFrame, sh: DataFrame, threshold: float,
@@ -411,6 +448,7 @@ def simhash_near_pairs(fps: DataFrame, max_hamming: int = 3,
     bucket O(M^2) in the join. Each (block, value) bucket keeps only
     its K smallest doc ids; run exact dedup first so this cap only
     ever trims pathological non-identical clusters (module docstring).
+    Without it, buckets pair through bucket_pairs' streaming join.
     """
     if n_blocks <= max_hamming:
         raise ValueError(
@@ -433,55 +471,9 @@ def simhash_near_pairs(fps: DataFrame, max_hamming: int = 3,
         id_col, "simhash", F.col("kb.blk").alias("blk"),
         F.col("kb.val").alias("val"),
     )
-    if max_bucket_size is not None:
-        # r06: ONE groupBy(blk, val) + bounded in-JVM combination
-        # expansion (the lsh_candidate_pairs shape) replaces the window
-        # cap (a full sort of the block rows) AND the merge-hinted
-        # sort-merge self-join. slice(sort_array(collect_list), 1, K)
-        # keeps the K smallest doc ids per bucket — sort_array over
-        # array<struct> orders by the leading (id) field, exactly
-        # cap_k_smallest's row_number-over-id semantics — and the
-        # expanded array carries both fingerprints for the hamming
-        # verify. Result-identical (same pairs, same dedup across
-        # blocks); pinned by the FNV/pigeonhole DuckDB oracles.
-        bkt = (
-            keyed.groupBy("blk", "val")
-            .agg(F.slice(F.sort_array(F.collect_list(F.struct(
-                F.col(id_col).alias("i"), F.col("simhash").alias("s")))),
-                1, max_bucket_size).alias("_ms"))
-            .filter(F.size("_ms") > 1)
-        )
-        cand = (
-            bkt.select(F.explode(F.expr(
-                "flatten(transform(_ms, (x, i) ->"
-                " transform(slice(_ms, i + 2, size(_ms)),"
-                " y -> named_struct('id_a', x.i, 'id_b', y.i,"
-                " 'sh_a', x.s, 'sh_b', y.s))))")).alias("p"))
-            .select("p.id_a", "p.id_b", "p.sh_a", "p.sh_b")
-            .distinct()
-        )
-    else:
-        # uncapped callers (bounded corpora / wide-radius audits): the
-        # equi-join keeps per-bucket memory flat when buckets may be
-        # arbitrarily large
-        a = keyed.alias("a").hint("merge")  # fact-fact: never broadcast
-        b = keyed.alias("b")
-        cand = (
-            a.join(
-                b,
-                (F.col("a.blk") == F.col("b.blk"))
-                & (F.col("a.val") == F.col("b.val"))
-                & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-            )
-            .select(
-                F.col(f"a.{id_col}").alias("id_a"),
-                F.col(f"b.{id_col}").alias("id_b"),
-                F.col("a.simhash").alias("sh_a"),
-                F.col("b.simhash").alias("sh_b"),
-            )
-            .distinct()
-        )
-    ham = F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
+    cand = bucket_pairs(keyed, ["blk", "val"], id_col,
+                        cap=max_bucket_size, payload_cols=("simhash",))
+    ham = F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b")))
     return (
         cand.withColumn("hamming", ham)
         .filter(F.col("hamming") <= max_hamming)

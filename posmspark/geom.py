@@ -397,15 +397,6 @@ def buffer_ring(ring: np.ndarray, dist: float) -> np.ndarray:
 # validity (check_bad_geom analog)
 
 
-def _segments_intersect(p1, p2, p3, p4) -> bool:
-    """Proper intersection of segments p1p2 and p3p4 (excluding shared endpoints)."""
-    d1 = np.cross(p4 - p3, p1 - p3)
-    d2 = np.cross(p4 - p3, p2 - p3)
-    d3 = np.cross(p2 - p1, p3 - p1)
-    d4 = np.cross(p2 - p1, p4 - p1)
-    return bool(((d1 > 0) != (d2 > 0)) and ((d3 > 0) != (d4 > 0)))
-
-
 def ring_self_intersection(ring: np.ndarray):
     """Find a self-intersection in a closed ring.
 

@@ -887,11 +887,11 @@ def _doc_shingles(spark, sf):
 def q_ngram_jaccard_pairs(spark, sf):
     """near-dup detection: word-3-gram Jaccard >= 0.8 pairs.
 
-    Scale shape (the 100-TB guard): candidate pairs come from an
-    equi-join on *cold* shingles only — shingles shared by more than
-    NGRAM_MAX_SHINGLE_FREQ docs are boilerplate and excluded from
-    candidate generation, so a hot shingle can never emit M^2/2 join
-    rows (dedup.minhash_signatures applies the same cap). The exact
+    Scale shape (the 100-TB guard): candidate pairs come from
+    dedup.bucket_pairs on *cold* shingles only — shingles shared by
+    more than NGRAM_MAX_SHINGLE_FREQ docs are boilerplate and excluded
+    from candidate generation, so a hot shingle can never emit M^2/2
+    pairs (dedup.minhash_signatures applies the same cap). The exact
     Jaccard is then computed over the FULL shingle sets of candidate
     pairs only, so emitted values are unchanged; a pair whose shared
     shingles are ALL boilerplate is the one class deliberately skipped.
@@ -915,21 +915,11 @@ def q_ngram_jaccard_pairs(spark, sf):
         .filter(F.col("df") > NGRAM_MAX_SHINGLE_FREQ).select("sh_h")
     )
     cold = shh.join(F.broadcast(hot), "sh_h", "left_anti")
-    # pair generation WITHOUT a fact-fact self-join (r05): cold
-    # shingles have df <= NGRAM_MAX_SHINGLE_FREQ by construction, so
-    # per-shingle doc lists are bounded arrays — ONE groupBy +
-    # in-JVM combination expansion replaces the sort-merge self-join,
-    # which exchanged AND sorted the exploded shingle table twice.
-    # Same (doc_a < doc_b) semantics: doc ids are distinct within a
-    # shingle (per-doc distinct upstream), arrays sorted.
-    grp = cold.groupBy("sh_h").agg(
-        F.sort_array(F.collect_list("doc_id")).alias("ds"))
-    pair = grp.select(F.explode(F.expr(
-        "flatten(transform(ds, (x, i) ->"
-        " transform(slice(ds, i + 2, size(ds)),"
-        " y -> named_struct('doc_a', x, 'doc_b', y))))"
-    )).alias("p")).select("p.doc_a", "p.doc_b")
-    cand = pair.distinct()
+    # cold shingles have df <= NGRAM_MAX_SHINGLE_FREQ by construction,
+    # so that is the bucket bound: in-JVM pair expansion, no self-join
+    cand = dedup.bucket_pairs(
+        cold, ["sh_h"], "doc_id", cap=NGRAM_MAX_SHINGLE_FREQ).select(
+            F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b"))
     # exact intersection per candidate pair from the STAGED arrays
     # (r06): attach each side's full hash array and count the overlap
     # in-JVM — n_inter = |shs_a ∩ shs_b| covers hot AND cold shingles
@@ -1131,6 +1121,8 @@ def q_simhash_pigeonhole_pairs(spark, sf):
     shape and is hash-checkable vs DuckDB. Buckets are capped at the
     50 smallest doc ids (exact-dup clusters share every block value —
     same sampling guard as minhash)."""
+    from posmspark import dedup
+
     d = _t(spark, sf, "documents")
     toks = d.select(
         "doc_id",
@@ -1161,26 +1153,8 @@ def q_simhash_pigeonhole_pairs(spark, sf):
                   F.explode(F.sequence(F.lit(0), F.lit(3))).alias("blk"))
         .withColumn("val", F.expr("shiftright(fp, blk * 8) & 255"))
     )
-    # r06: grouped bucket expansion (dedup.simhash_near_pairs shape) —
-    # the 50-smallest-ids cap falls out of slice(sort_array(...), 1, 50)
-    # and pairs expand in-JVM, replacing the window cap + merge-hinted
-    # self-join; result-identical, DuckDB oracle unchanged.
-    bkt = (
-        blocks.groupBy("blk", "val")
-        .agg(F.slice(F.sort_array(F.collect_list(F.struct(
-            F.col("doc_id").alias("i"), F.col("fp").alias("f")))),
-            1, 50).alias("_ms"))
-        .filter(F.size("_ms") > 1)
-    )
-    cand = (
-        bkt.select(F.explode(F.expr(
-            "flatten(transform(_ms, (x, i) ->"
-            " transform(slice(_ms, i + 2, size(_ms)),"
-            " y -> named_struct('id_a', x.i, 'id_b', y.i,"
-            " 'fp_a', x.f, 'fp_b', y.f))))")).alias("p"))
-        .select("p.id_a", "p.id_b", "p.fp_a", "p.fp_b")
-        .distinct()
-    )
+    cand = dedup.bucket_pairs(blocks, ["blk", "val"], "doc_id", cap=50,
+                              payload_cols=("fp",))
     return (
         cand.withColumn(
             "hamming",
@@ -1334,20 +1308,19 @@ def q_embedding_cosine_dups(spark, sf):
     embedding). The synthetic embeddings table has no natural near-dups
     (max pairwise cosine ~0.52), so the query first derives
     deterministic perturbed copies of every 5th vector
-    (_embedding_dup_fixture), then finds ALL pairs at cosine >= 0.99
-    via ann.cosine_near_pairs. r06 (closes VERDICT r05's perf-weak):
-    the call now passes the fixture's dim, so cosine_near_pairs'
-    regime check dispatches this dim=64/threshold=0.99 query — the
-    exact grid's measured-quadratic corner (129s at 9.6k vectors) —
-    to the scale-safe LSH+exact-verify path, pinned at the SAME
-    16-bit x 8-table configuration the embedding_cosine_dups_lsh
-    registry row hash-proved against this very oracle in r05. DuckDB
-    brute-forces the same pairs for the hash gate (rows unchanged)."""
+    (_embedding_dup_fixture), then finds ALL pairs at cosine >= 0.99.
+    At dim=64/threshold=0.99 the exact grid of ann.cosine_near_pairs
+    cannot prune (its measured-quadratic corner: 129s at 9.6k
+    vectors), so the query calls the scale-safe LSH+exact-verify path,
+    ann.cosine_near_pairs_lsh, at the SAME 16-bit x 8-table
+    configuration the embedding_cosine_dups_lsh registry row
+    hash-proved against this very oracle in r05. DuckDB brute-forces
+    the same pairs for the hash gate (rows unchanged)."""
     from posmspark import ann
 
-    pairs = ann.cosine_near_pairs(
-        _embedding_dup_fixture(spark, sf), threshold=0.99,
-        id_col="vec_id", emb_col="emb", dim=64, n_planes=16)
+    pairs = ann.cosine_near_pairs_lsh(
+        _embedding_dup_fixture(spark, sf), threshold=0.99, spark=spark,
+        dim=64, id_col="vec_id", emb_col="emb", n_planes=16, n_tables=8)
     return pairs.select(
         "id_a", "id_b", F.round("cos_sim", 6).alias("cos_sim"))
 
@@ -1538,7 +1511,7 @@ def q_doc_fingerprint(spark, sf):
     fingerprint — hash every 16-char window, keep the minimum (the
     winnowing/Rabin-Karp selection rule; md5 stands in for the
     polynomial so DuckDB reproduces it bit-for-bit; the O(n) polynomial
-    rolling kernel lives in textx.rolling_fingerprint, unit-tested).
+    rolling kernel lives in textx.rolling_window_hashes, unit-tested).
     Near-identical docs share fingerprints; output is the distinct
     fingerprint census."""
     d = _t(spark, sf, "documents")

@@ -46,55 +46,7 @@ def get_spark(
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    _prewarm_python_workers(spark, cpus)
     return spark
-
-
-#: application ids whose Python worker pool has been prewarmed —
-#: getOrCreate() hands back the same session repeatedly and the warmup
-#: must run once per JVM, not once per get_spark() call
-_PREWARMED: set = set()
-
-
-def _prewarm_python_workers(spark: SparkSession, cpus: int) -> None:
-    """Fork and import-warm one Arrow-UDF Python worker per core at
-    session build time (guide §4.5: heavyweight init once, amortized).
-
-    The first full-width pandas-UDF stage of a fresh session otherwise
-    pays ~cores x (daemon fork + numpy/pandas/pyarrow import + Arrow
-    serializer setup) INSIDE whatever query happens to run first —
-    measured ~2.5s of the flagship pipeline's first 600k-doc run on
-    local[32], because its 50k-row warmup slice only touches a few
-    partitions and leaves most of the pool cold. One 1-row-per-core
-    identity pandas UDF moves that cost into session init, where a
-    long-running job pays it anyway. Data-independent (spark.range),
-    skippable via POSMSPARK_PREWARM=0."""
-    if os.environ.get("POSMSPARK_PREWARM", "1") == "0":
-        return
-    app_id = spark.sparkContext.applicationId
-    if app_id in _PREWARMED:
-        return
-    _PREWARMED.add(app_id)
-    try:
-        import pandas as pd
-        from pyspark.sql.functions import col, pandas_udf
-
-        @pandas_udf("long")
-        def _touch(s: pd.Series) -> pd.Series:
-            import numpy  # noqa: F401  (pulled into the worker cache)
-            return s
-
-        spark.sparkContext.setJobDescription(
-            "session init: python worker prewarm")
-        (spark.range(0, cpus, 1, cpus).select(_touch(col("id")))
-         .write.format("noop").mode("overwrite").save())
-    except Exception:
-        pass  # warmup is best-effort; the session itself is unaffected
-    finally:
-        try:
-            spark.sparkContext.setJobDescription(None)
-        except Exception:
-            pass
 
 
 def spread_input(df, min_parts: int | None = None):

@@ -175,16 +175,6 @@ def gen_admin_mapping_pdf() -> pd.DataFrame:
 ADMIN_DEFAULTS = {"admin_level_1": 4, "admin_level_2": 6, "admin_level_3": 8}
 
 
-def boundaries_df(spark: SparkSession) -> DataFrame:
-    """Boundaries fixture as a Spark DataFrame."""
-    pdf = gen_boundaries_pdf()
-    return spark.createDataFrame(pdf)
-
-
-def admin_mapping_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(gen_admin_mapping_pdf())
-
-
 def pages_df(spark: SparkSession, n: int, partitions: int | None = None) -> DataFrame:
     """Distributed deterministic pages table (url, warc_ts, html, text, lang).
 

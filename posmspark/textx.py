@@ -199,17 +199,3 @@ def rolling_window_hashes(data: bytes, window: int = FP_WINDOW) -> np.ndarray:
         weights = powers[::-1].copy()  # base^(window-1) .. base^0
         strided = np.lib.stride_tricks.sliding_window_view(x, window)
         return (strided * weights[None, :]).sum(axis=1, dtype=np.uint64)
-
-
-@pandas_udf(T.LongType())
-def rolling_fingerprint_udf(text: pd.Series) -> pd.Series:
-    """Min rolling-window hash per document (winnowing selection rule)
-    — the O(n) production kernel behind relops.q_doc_fingerprint's
-    engine-parity md5 variant."""
-    out = np.zeros(len(text), dtype=np.int64)
-    for i, t in enumerate(text):
-        if t is None:
-            continue
-        h = rolling_window_hashes(t.encode("utf-8"))
-        out[i] = np.int64(h.min().astype(np.int64))
-    return pd.Series(out)

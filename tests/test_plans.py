@@ -219,14 +219,13 @@ def test_cosine_near_pairs_plan_is_equi_join(spark):
 
 
 def test_cosine_near_pairs_dispatches_degenerate_grid(spark):
-    """VERDICT r05 weak item (closed r06): at dim=64/threshold=0.99 the
-    axis grid cannot prune (cell width w = sqrt(2-2t) >= the ~1/sqrt(d)
-    per-axis spread) and cosine_near_pairs must forward to the LSH
-    scale path — pinned by plan shape: the LSH verify's shuffle-hash
-    joins appear and the exact grid's merge-hinted sort-merge join does
-    not. A low-dim call keeps the exact grid plan, and the registry's
-    embedding_cosine_dups query (the formerly quadratic regime) now
-    plans through the LSH path too."""
+    """At dim=64/threshold=0.99 the axis grid cannot prune (cell width
+    w = sqrt(2-2t) >= the ~1/sqrt(d) per-axis spread), yet
+    cosine_near_pairs is documented EXACT: it must keep the grid
+    self-join there and never plan the recall-controlled LSH path,
+    whose verify joins are shuffle-hash. The registry's
+    embedding_cosine_dups query calls the LSH path explicitly and
+    keeps that plan."""
     import numpy as np
 
     from posmspark import ann
@@ -237,16 +236,9 @@ def test_cosine_near_pairs_dispatches_degenerate_grid(spark):
     df = spark.createDataFrame(
         [(i, [float(x) for x in mat[i]]) for i in range(200)],
         "vec_id long, emb array<double>")
-    plan = _plan(ann.cosine_near_pairs(df, 0.99, dim=64))
-    assert "ShuffledHashJoin" in plan          # LSH verify joins
-    assert "SortMergeJoin" not in plan         # no grid self-join
-    # low-dim regime: w*sqrt(dim) < 1 -> exact grid retained
-    lo = spark.createDataFrame(
-        [(i, [float(x) for x in rng.standard_normal(4)])
-         for i in range(50)],
-        "vec_id long, emb array<double>")
-    plan = _plan(ann.cosine_near_pairs(lo, 0.99, dim=4))
-    assert "SortMergeJoin" in plan
+    plan = _plan(ann.cosine_near_pairs(df, 0.99))
+    assert "ShuffledHashJoin" not in plan      # no LSH verify joins
+    assert "SortMergeJoin" in plan             # the exact grid self-join
     fn, _ = QUERIES["embedding_cosine_dups"]
     plan = _plan(fn(spark, SF))
     assert "ShuffledHashJoin" in plan
@@ -254,7 +246,7 @@ def test_cosine_near_pairs_dispatches_degenerate_grid(spark):
 
 
 def test_minhash_plan_is_join_free(spark):
-    """r06: minhash candidate generation is grouped aggregation +
+    """r06: capped minhash candidate generation is grouped aggregation +
     in-JVM combination expansion end to end — the physical plan must
     contain NO join operator of any kind (the r05 shape's sort-merge
     self-join and its Catalyst-underestimate broadcast-OOM risk are
@@ -270,6 +262,15 @@ def test_minhash_plan_is_join_free(spark):
     plan = _plan(q_ngram_jaccard_pairs(spark, SF))
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
+    # uncapped signatures carry no bucket bound: candidates stream
+    # through the sort-merge self-join, never one collect_list buffer
+    from posmspark import dedup
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    sigs = dedup.minhash_signatures(dedup.shingles(docs), n_bands=4)
+    plan = _plan(dedup.lsh_candidate_pairs(sigs))
+    assert "SortMergeJoin" in plan
+    assert "collect_list" not in plan
 
 
 def test_cosine_near_pairs_lsh_plan_never_cartesian(spark):
