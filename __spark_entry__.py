@@ -641,68 +641,21 @@ _SPATIAL_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
 
 #: Driver-budget ordering (VERDICT r02 item 1): the driver verifies
 #: registry entries IN ORDER with a ~50-query budget. Rotation: every
-#: entry whose plan changed with the dedup.bucket_pairs rework comes
+#: entry whose plan changed with the linear-size cell encoder comes
 #: FIRST (result-identical by construction, but the driver should
 #: re-prove that, not trust it); then the entries the previous order
-#: left past the budget; the entries the previous order put first
-#: (re-proved then, unchanged since) fill the tail.
+#: left past the budget; then the rows-only residue; the entries the
+#: previous order put first (re-proved then, unchanged since) fill the
+#: tail.
 _VERIFY_FIRST = [
-    # --- plan changed: candidate pairs through dedup.bucket_pairs
-    "minhash_band_candidates",  # bucket cap read from sig metadata
-    "minhash_verified_dups",    # same candidates + verify_jaccard
-    "ngram_jaccard_pairs",      # cold-shingle buckets, cap=50
-    "simhash_near_pairs",       # blocks with fingerprint payload
-    "simhash_pigeonhole_pairs",  # blocks with fp payload, cap=50
-    "embedding_cosine_dups",    # calls cosine_near_pairs_lsh directly
-    "embedding_cosine_dups_lsh",  # i < j bucket expansion
+    # --- plan changed: cells.cell_column / textx.with_ingest_jvm
+    "pip_assignment",          # ingest + cell encode feed the PIP join
+    "pip_tile_rollup",         # same ingest, tile rollup on top
+    "cell_tile_stats",         # same ingest, per-cell stats
+    "streaming_tile_counts",   # streaming ingest via with_ingest_jvm
+    "knn_cellring",            # qcell: JVM encoder, was a Python UDF
+    "knn_topk_flat",           # knn_cellring on parquet points
     # --- past the budget in the previous order
-    "scan_filter_project",
-    "coalesce_upper",
-    "id_prefix",
-    "boundary_predicate",
-    "filler_filter",
-    "anti_join",
-    "semi_join",
-    "unusable_anti_join",
-    "hierarchy_join",
-    "mapping_override",
-    "first_match",
-    "tile_clip_areas",
-    "pip_assignment",
-    "pip_tile_rollup",
-    "ann_ivf_probe_topk",
-    "repetition_stats",
-    # --- unchanged, verified in the previous order's budget window
-    "lang_quality",
-    "rand_indicators",
-    "problem_url",
-    "ann_lsh_topk",
-    "multimodal_features",
-    "poly_export",
-    "shapefile_source",
-    "cell_tile_stats",
-    "streaming_tile_counts",
-    "streaming_dedup",
-    "incremental_manifest",
-    "table_snapshots",
-    "knn_cellring",
-    "byte_identity_audit",
-    "problems_routing",
-    "knn_topk_flat",
-    "dissolve_parents",
-    "residual_holes",
-    "simplify_mesh_stats",
-    "dual_export",
-    "zip_package_counts",
-    "topojson_arc_stats",
-    "dedup_exact",
-    "token_stats",
-    # --- rows-only residue: keep their rows fresh every round (their
-    # oracle-backed siblings cover the checkable semantics)
-    "topojson_export",
-    "zip_package_manifest",
-    "ann_ivf_topk",
-    # --- first in the previous order: re-proved then, unchanged since
     "ann_cosine_topk",
     "case_bucket",
     "date_trunc_hourly",
@@ -721,6 +674,54 @@ _VERIFY_FIRST = [
     "topk",
     "union_bag",
     "window_running",
+    # --- rows-only residue: keep their rows fresh every round (their
+    # oracle-backed siblings cover the checkable semantics)
+    "topojson_export",
+    "zip_package_manifest",
+    "ann_ivf_topk",
+    # --- unchanged, verified in the previous order's budget window
+    "scan_filter_project",
+    "coalesce_upper",
+    "id_prefix",
+    "boundary_predicate",
+    "filler_filter",
+    "anti_join",
+    "semi_join",
+    "unusable_anti_join",
+    "hierarchy_join",
+    "mapping_override",
+    "first_match",
+    "tile_clip_areas",
+    "ann_ivf_probe_topk",
+    "repetition_stats",
+    "lang_quality",
+    "rand_indicators",
+    "problem_url",
+    "ann_lsh_topk",
+    "multimodal_features",
+    "poly_export",
+    "shapefile_source",
+    "streaming_dedup",
+    "incremental_manifest",
+    "table_snapshots",
+    "byte_identity_audit",
+    "problems_routing",
+    "dissolve_parents",
+    "residual_holes",
+    "simplify_mesh_stats",
+    "dual_export",
+    "zip_package_counts",
+    "topojson_arc_stats",
+    "dedup_exact",
+    "token_stats",
+    # --- first in the previous order: re-proved then, unchanged since
+    "minhash_band_candidates",
+    "minhash_verified_dups",
+    "ngram_jaccard_pairs",
+    "simhash_near_pairs",
+    "simhash_pigeonhole_pairs",
+    "embedding_cosine_dups",
+    "embedding_cosine_dups_lsh",
 ]
 
 

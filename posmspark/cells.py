@@ -95,6 +95,21 @@ def cell_column(lon, lat, res: int = DEFAULT_RES):
     At 100 TB the cell encode runs on every row of the fact table;
     keeping it inside Tungsten codegen instead of an Arrow round-trip
     is the difference between a scan-speed stage and a Python-bound one.
+
+    Keep the expression LINEAR: it names each coordinate's grid
+    arithmetic once, so its size does not depend on `res`. A shift/mask
+    ladder like _spread_bits names its operand twice per step; as a
+    column expression its five steps copy the coordinate (and whatever
+    computes it, e.g. a regexp_extract) 2^5 = 32 times, and the
+    generated whole-stage method grows past 8,000 bytecode bytes, the
+    size above which HotSpot never JIT-compiles a method: the stage then
+    runs in the bytecode interpreter. The spread here is `bin(v)` read
+    back as base-4 digits: binary digit k of v becomes the base-4 digit
+    of weight 4^k = 2^(2k), i.e. bit 2k. (A fold over the bits with
+    `aggregate` is linear too, but higher-order functions are
+    CodegenFallback and take the whole Project out of codegen.) Check a
+    plan with `codegenStringSeq(plan)._3().maxMethodCodeSize()`
+    (tests/test_plans.py).
     """
     from pyspark.sql import functions as F
 
@@ -105,17 +120,7 @@ def cell_column(lon, lat, res: int = DEFAULT_RES):
         return F.greatest(F.lit(0), F.least(F.lit(int(nf) - 1), g)).cast("long")
 
     def spread(v):
-        masks = [
-            (16, 0x0000FFFF0000FFFF),
-            (8, 0x00FF00FF00FF00FF),
-            (4, 0x0F0F0F0F0F0F0F0F),
-            (2, 0x3333333333333333),
-            (1, 0x5555555555555555),
-        ]
-        out = v
-        for shift, mask in masks:
-            out = F.shiftleft(out, shift).bitwiseOR(out).bitwiseAND(F.lit(mask))
-        return out
+        return F.conv(F.bin(v), 4, 10).cast("long")
 
     i = grid(lon, 180.0, 360.0)
     j = grid(lat, 90.0, 180.0)

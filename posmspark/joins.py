@@ -57,9 +57,9 @@ COVER_RES = 10
 
 def with_cell(df: DataFrame, lon_col: str = "lon", lat_col: str = "lat",
               out_col: str = "cell") -> DataFrame:
-    """Cell encode via the pure-JVM bit-twiddling expression (codegen'd;
-    cell_udf is the Arrow/numpy equivalent, kept for kernel parity
-    tests and non-SQL callers)."""
+    """Cell encode via the pure-JVM expression cells.cell_column
+    (codegen'd; cell_udf is the Arrow/numpy equivalent, kept as the
+    reference kernel for parity tests)."""
     return df.withColumn(
         out_col, cells.cell_column(F.col(lon_col), F.col(lat_col))
     )
@@ -630,7 +630,7 @@ def knn_cellring(points: DataFrame, sites_pdf: pd.DataFrame, k: int,
     scell = cells.encode(slon, slat, res)
 
     pts = points.select(point_key, "lon", "lat").withColumn(
-        "qcell", cell_udf_at(res)(F.col("lon"), F.col("lat"))
+        "qcell", cells.cell_column(F.col("lon"), F.col("lat"), res)
     ).filter(F.col("qcell").isNotNull())
 
     # Cell dimensions (degrees/meters) for the termination guarantee.

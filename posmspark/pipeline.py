@@ -352,9 +352,11 @@ WHERE osm_id_l0 IS NOT NULL OR osm_id_l1 IS NOT NULL
 
 def _sql_cell_ctes(src: str, res: int = 12) -> str:
     """The cells.cell_column Morton encoder as a DuckDB CTE chain over
-    source relation `src` (must expose lon/lat): EXACT same arithmetic
-    as the JVM expression — (v+off)/span*nf floor, clamp to [0, 2^res),
-    the five spread steps, res tag in bits 58+ — so cell ids agree
+    source relation `src` (must expose lon/lat): EXACT same float
+    arithmetic as the JVM expression — (v+off)/span*nf floor, clamp to
+    [0, 2^res) — then the bit spread as cells._spread_bits' five
+    shift/mask steps (exact integer ops, so the same bits as the JVM's
+    base-4 reading of bin(v)), res tag in bits 58+ — so cell ids agree
     bit-for-bit across engines. Yields a relation `cellx` carrying all
     of src's columns plus `cell`."""
     nmax = (1 << res) - 1

@@ -148,15 +148,17 @@ def with_ingest_jvm(df, html_col: str = "html", text_col: str = "text"):
           & F.col(text_col).isNotNull())
 
     def num(group):
-        s = F.regexp_extract(F.col(text_col), GEO_RE, group)
-        # guard the cast: ANSI mode refuses '' (no regex match)
-        return F.when(s != "", s.cast("double"))
+        # try_cast: '' (no regex match) -> null, where ANSI cast refuses
+        # it; naming the regex once keeps one evaluation per coordinate
+        return F.regexp_extract(F.col(text_col), GEO_RE, group).try_cast("double")
 
-    lat, lon = num(1), num(2)
-    return df.select(
-        "*", ok.alias("text_ok"), lat.alias("lat"), lon.alias("lon"),
-        cells.cell_column(lon, lat).alias("cell"),
-    )
+    # project lat/lon first, then encode from those columns: the encoder
+    # names each coordinate several times and would otherwise inline
+    # (and re-run) the regex at every mention
+    parsed = df.select("*", ok.alias("text_ok"), num(1).alias("lat"),
+                       num(2).alias("lon"))
+    return parsed.select(
+        "*", cells.cell_column(F.col("lon"), F.col("lat")).alias("cell"))
 
 
 def with_extracted_text(df, html_col: str = "html", out_col: str = "text_extracted"):

@@ -345,3 +345,35 @@ def test_repetition_stats_map_only(spark):
     # and each sorted array is neighbor-compared once (one zip_with)
     assert plan.count("zip_with(slice(sg") == 1, plan
     assert plan.count("zip_with(slice(sw") == 1, plan
+
+
+def _max_method_sizes(df) -> list[int]:
+    """maxMethodCodeSize of every whole-stage-codegen subtree of df's
+    executed plan (bytecode bytes of its largest generated method)."""
+    debug = df.sparkSession._jvm.org.apache.spark.sql.execution.debug
+    subtrees = debug.package.codegenStringSeq(
+        df._jdf.queryExecution().executedPlan())
+    it = subtrees.iterator()
+    sizes = []
+    while it.hasNext():
+        sizes.append(it.next()._3().maxMethodCodeSize())
+    return sizes
+
+
+def test_cell_encode_stays_jit_compilable(spark):
+    """HotSpot never JIT-compiles a method above 8,000 bytecode bytes.
+    The ingest and cell-encode stages run on every fact row, so their
+    generated methods must stay below that, and the ingest must run the
+    geotag regex once per coordinate, not once per mention in the
+    encoder (which copied it into a 44 KB method)."""
+    from posmspark import joins, textx
+
+    ingest = textx.with_ingest_jvm(synth.pages_df(spark, 100))
+    points = spark.range(100).select(
+        (F.col("id") * 3.7 - 180.0).alias("lon"),
+        (F.col("id") * 1.9 - 90.0).alias("lat"))
+    for df in (ingest, joins.with_cell(points)):
+        sizes = _max_method_sizes(df)
+        assert sizes and max(sizes) < 8000, sizes
+    optimized = ingest._jdf.queryExecution().optimizedPlan().toString()
+    assert optimized.count("regexp_extract(") == 2, optimized[:2000]

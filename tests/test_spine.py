@@ -141,10 +141,10 @@ def test_fused_ingest_matches_reference_kernels(spark, pages):
 
 
 def test_jvm_cell_encoder_matches_numpy(spark, pages):
-    """cell_column (JVM bit-twiddling) must be bit-identical to the
-    numpy encoder used on the broadcast/cover side."""
+    """cell_column (JVM expression) must be bit-identical to the numpy
+    encoder used on the broadcast/cover side."""
     from posmspark import cells
-    from posmspark.joins import cell_udf
+    from posmspark.joins import cell_udf, cell_udf_at
 
     geo = textx.with_geocode(pages).filter(F.col("lat").isNotNull())
     both = geo.select(
@@ -152,6 +152,28 @@ def test_jvm_cell_encoder_matches_numpy(spark, pages):
         cell_udf(F.col("lon"), F.col("lat")).alias("py"),
     )
     assert both.filter(~F.col("jvm").eqNullSafe(F.col("py"))).count() == 0
+
+    # edge inputs, bit for bit against the numpy encoder at several
+    # resolutions: the antimeridian (lon 180 lands in the last column,
+    # not past it), the poles, out-of-range coords that must clamp, and
+    # NaN/null, where numpy's -1 must be a null cell
+    lons = [-180.0, 180.0, 180.00001, -180.00001, 500.0, -500.0, 0.0,
+            -0.0, 12.34567, float("nan"), None]
+    lats = [-90.0, 90.0, 91.0, -91.0, 0.0, -45.5, float("nan"), None]
+    pairs = [(x, y) for x in lons for y in lats]
+    edge = spark.createDataFrame(pairs, "lon double, lat double")
+    for res in (8, 10, 12):
+        got = edge.select(
+            "lon", "lat",
+            cells.cell_column(F.col("lon"), F.col("lat"), res).alias("cell"),
+            cell_udf_at(res)(F.col("lon"), F.col("lat")).alias("py"),
+        ).collect()
+        assert len(got) == len(pairs)
+        lon = np.array([np.nan if r.lon is None else r.lon for r in got])
+        lat = np.array([np.nan if r.lat is None else r.lat for r in got])
+        want = cells.encode(lon, lat, res)
+        for r, w in zip(got, want):
+            assert r.cell == r.py == (None if w == -1 else int(w)), (res, r, w)
 
 
 def test_hot_cell_skew_exists(spark, pages):
