@@ -48,15 +48,18 @@ def read_manifest(out_dir: str) -> dict | None:
 
 
 def partition_lineage(df: DataFrame) -> list[dict]:
-    """Per-partition row counts of a materialized DataFrame."""
+    """Per-partition row counts of a materialized DataFrame, in
+    partition order. One row per partition comes back, so they are
+    sorted here: an orderBy in the plan would add a sampling job and a
+    sort stage to every call."""
     rows = (
         df.groupBy(F.spark_partition_id().alias("partition_id"))
         .count()
-        .orderBy("partition_id")
         .collect()
     )
-    return [{"partition_id": int(r["partition_id"]), "rows": int(r["count"])}
-            for r in rows]
+    return sorted(({"partition_id": int(r["partition_id"]),
+                    "rows": int(r["count"])} for r in rows),
+                  key=lambda p: p["partition_id"])
 
 
 def run_stage(
@@ -81,7 +84,9 @@ def run_stage(
     t0 = time.monotonic()
     df = build()
     df.write.mode("overwrite").parquet(out_dir)
-    out = spark.read.parquet(out_dir)
+    # read back with the schema just written: inferring it would run a
+    # footer-reading job
+    out = spark.read.schema(df.schema).parquet(out_dir)
     lineage = partition_lineage(out)
     manifest = {
         "stage": stage,

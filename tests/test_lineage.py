@@ -38,6 +38,31 @@ def test_stage_writes_manifest_and_resumes(spark, tmp_path):
     assert df3.count() == 100 and calls["n"] == 2
 
 
+def test_stage_readback_matches_inferred_schema(spark, tmp_path):
+    """run_stage reads its output back with the schema it wrote (no
+    footer-reading job): that schema, nullability and column metadata
+    included, must be the one a plain read infers; the lineage rows
+    come back in partition order."""
+    out_dir = str(tmp_path / "stage_schema")
+
+    def build():
+        return spark.range(0, 1000, 1, 7).select(
+            F.col("id"),  # non-nullable in the built frame
+            F.col("id").cast("double").alias("x", metadata={"unit": "deg"}),
+            F.struct(F.col("id").alias("a"),
+                     F.lit("s").alias("b")).alias("st"),
+            F.timestamp_seconds(F.col("id")).alias("ts"),
+            F.when(F.col("id") % 3 == 0, F.col("id")).alias("maybe"),
+        )
+
+    out = lineage.run_stage(spark, "schema", "fp", out_dir, build)
+    assert out.schema == spark.read.parquet(out_dir).schema
+    assert out.count() == 1000
+    parts = lineage.read_manifest(out_dir)["partitions"]
+    ids = [p["partition_id"] for p in parts]
+    assert ids == sorted(ids) and sum(p["rows"] for p in parts) == 1000
+
+
 def test_killed_stage_recomputes(spark, tmp_path):
     """A stage killed mid-write leaves parquet but no manifest -> the
     rerun recomputes instead of trusting a torn checkpoint."""
