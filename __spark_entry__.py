@@ -641,21 +641,40 @@ _SPATIAL_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
 
 #: Driver-budget ordering (VERDICT r02 item 1): the driver verifies
 #: registry entries IN ORDER with a ~50-query budget. Rotation: every
-#: entry whose plan changed with the linear-size cell encoder comes
-#: FIRST (result-identical by construction, but the driver should
-#: re-prove that, not trust it); then the entries the previous order
-#: left past the budget; then the rows-only residue; the entries the
-#: previous order put first (re-proved then, unchanged since) fill the
-#: tail.
+#: entry whose code changed with the shared parquet footer reader
+#: (lineage.parquet_files) comes FIRST (result-identical by
+#: construction, but the driver should re-prove that, not trust it);
+#: then the entries the previous order left past the budget; then the
+#: rows-only residue; the entries the previous order put first
+#: (re-proved then, unchanged since) fill the tail.
 _VERIFY_FIRST = [
-    # --- plan changed: cells.cell_column / textx.with_ingest_jvm
-    "pip_assignment",          # ingest + cell encode feed the PIP join
-    "pip_tile_rollup",         # same ingest, tile rollup on top
-    "cell_tile_stats",         # same ingest, per-cell stats
-    "streaming_tile_counts",   # streaming ingest via with_ingest_jvm
-    "knn_cellring",            # qcell: JVM encoder, was a Python UDF
-    "knn_topk_flat",           # knn_cellring on parquet points
+    # --- code changed: footer-read lineage and file listing
+    "incremental_manifest",    # manifest rows from footers
+    "table_snapshots",         # snapshot file rows from footers
     # --- past the budget in the previous order
+    "byte_identity_audit",
+    "problems_routing",
+    "dissolve_parents",
+    "residual_holes",
+    "simplify_mesh_stats",
+    "dual_export",
+    "zip_package_counts",
+    "topojson_arc_stats",
+    "dedup_exact",
+    "token_stats",
+    "minhash_band_candidates",
+    "minhash_verified_dups",
+    "ngram_jaccard_pairs",
+    "simhash_near_pairs",
+    "simhash_pigeonhole_pairs",
+    "embedding_cosine_dups",
+    "embedding_cosine_dups_lsh",
+    # --- rows-only residue: keep their rows fresh every round (their
+    # oracle-backed siblings cover the checkable semantics)
+    "topojson_export",
+    "zip_package_manifest",
+    "ann_ivf_topk",
+    # --- unchanged, verified in the previous order's budget window
     "ann_cosine_topk",
     "case_bucket",
     "date_trunc_hourly",
@@ -674,12 +693,6 @@ _VERIFY_FIRST = [
     "topk",
     "union_bag",
     "window_running",
-    # --- rows-only residue: keep their rows fresh every round (their
-    # oracle-backed siblings cover the checkable semantics)
-    "topojson_export",
-    "zip_package_manifest",
-    "ann_ivf_topk",
-    # --- unchanged, verified in the previous order's budget window
     "scan_filter_project",
     "coalesce_upper",
     "id_prefix",
@@ -702,26 +715,14 @@ _VERIFY_FIRST = [
     "poly_export",
     "shapefile_source",
     "streaming_dedup",
-    "incremental_manifest",
-    "table_snapshots",
-    "byte_identity_audit",
-    "problems_routing",
-    "dissolve_parents",
-    "residual_holes",
-    "simplify_mesh_stats",
-    "dual_export",
-    "zip_package_counts",
-    "topojson_arc_stats",
-    "dedup_exact",
-    "token_stats",
-    # --- first in the previous order: re-proved then, unchanged since
-    "minhash_band_candidates",
-    "minhash_verified_dups",
-    "ngram_jaccard_pairs",
-    "simhash_near_pairs",
-    "simhash_pigeonhole_pairs",
-    "embedding_cosine_dups",
-    "embedding_cosine_dups_lsh",
+    # --- first in the previous order (cell encoder): re-proved then,
+    # unchanged since
+    "pip_assignment",
+    "pip_tile_rollup",
+    "cell_tile_stats",
+    "streaming_tile_counts",
+    "knn_cellring",
+    "knn_topk_flat",
 ]
 
 

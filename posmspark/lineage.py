@@ -8,31 +8,42 @@ Our Spark restatement (SURVEY.md §2.8): every pipeline stage writes
 Parquet + a _manifest.json carrying
 
   {stage, input_fingerprint, n_rows, n_partitions,
-   partitions: [{partition_id, rows}...], wall_ms}
+   partitions: [{partition_id, rows}...], null_counts: {column: n},
+   wall_ms}
 
 A rerun whose (stage, input_fingerprint) matches an existing manifest
 skips the stage and reads the checkpoint — resume-from-any-stage. The
-per-partition row counts are the north rule's lineage metrics; at
-cluster scale they come from one cheap groupBy(spark_partition_id())
-over the just-written output.
+per-partition row counts are the north rule's lineage metrics. They
+come from the parquet footers Spark has just written, read on the
+driver (parquet_footer), so recording them runs no Spark job: rows per
+write task (partition_id is the task index in the part-NNNNN file
+name), plus null counts per top-level column. A resume reads the
+schema Spark stored in the checkpoint's own footer instead of
+inferring it, which would run a job too.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import re
 import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 MANIFEST = "_manifest.json"
 
 # partition-key charset safe from hive path escaping (see
 # run_stage_incremental)
-import re  # noqa: E402
-
 _SAFE_KEY = re.compile(r"[A-Za-z0-9_.\-]+")
+
+# Spark names each data file part-<task index>-<write job uuid>...
+_TASK_FILE = re.compile(r"part-(\d+)-")
+
+# footer key under which Spark stores the DataFrame schema it wrote
+_SPARK_SCHEMA = b"org.apache.spark.sql.parquet.row.metadata"
 
 
 def _manifest_path(out_dir: str) -> str:
@@ -47,19 +58,89 @@ def read_manifest(out_dir: str) -> dict | None:
         return json.load(f)
 
 
+def parquet_footer(path: str) -> dict:
+    """Row count, per-column null counts and the Spark schema of one
+    parquet file (path or URI), read from its footer on the driver: no
+    data read, no Spark job.
+
+    null_counts holds the top-level primitive columns in schema order;
+    nested leaves (a dotted path) and any column with a chunk that
+    lacks the null_count statistic are left out. spark_schema is the
+    JSON Spark stores in the footer, or None for a file Spark did not
+    write."""
+    import pyarrow.parquet as pq
+
+    md = pq.read_metadata(path)
+    stats: dict[str, list] = {}
+    for g in range(md.num_row_groups):
+        rg = md.row_group(g)
+        for c in range(rg.num_columns):
+            col = rg.column(c)
+            if "." not in col.path_in_schema:
+                stats.setdefault(col.path_in_schema, []).append(
+                    col.statistics)
+    return {
+        "rows": md.num_rows,
+        "null_counts": {
+            name: sum(s.null_count for s in ss) for name, ss in stats.items()
+            if all(s is not None and s.has_null_count for s in ss)},
+        "spark_schema": (md.metadata or {}).get(_SPARK_SCHEMA),
+    }
+
+
+def parquet_files(data_dir: str) -> list[dict]:
+    """Every parquet data file under data_dir: its path relative to
+    data_dir, the hive partition values carried in that path, and its
+    parquet_footer."""
+    files = []
+    for root, _dirs, fns in os.walk(data_dir):
+        for fn in sorted(fns):
+            if not fn.endswith(".parquet"):
+                continue
+            full = os.path.join(root, fn)
+            rel = os.path.relpath(full, data_dir)
+            parts = {}
+            for seg in rel.split(os.sep)[:-1]:
+                if "=" in seg:
+                    k, v = seg.split("=", 1)
+                    parts[k] = v
+            files.append({"path": rel, "partition": parts,
+                          **parquet_footer(full)})
+    return files
+
+
+def _sum_null_counts(footers: list[dict]) -> dict[str, int]:
+    """Per-column null counts summed over files; a column missing from
+    any file's null_counts is left out."""
+    if not footers:
+        return {}
+    return {c: sum(f["null_counts"][c] for f in footers)
+            for c in footers[0]["null_counts"]
+            if all(c in f["null_counts"] for f in footers)}
+
+
 def partition_lineage(df: DataFrame) -> list[dict]:
-    """Per-partition row counts of a materialized DataFrame, in
-    partition order. One row per partition comes back, so they are
-    sorted here: an orderBy in the plan would add a sampling job and a
-    sort stage to every call."""
-    rows = (
-        df.groupBy(F.spark_partition_id().alias("partition_id"))
-        .count()
-        .collect()
-    )
-    return sorted(({"partition_id": int(r["partition_id"]),
-                    "rows": int(r["count"])} for r in rows),
-                  key=lambda p: p["partition_id"])
+    """Rows written per write task of a DataFrame read from Spark-written
+    parquet, in partition_id (task index) order, from the footers of
+    df.inputFiles(): no Spark job. Files of one task (maxRecordsPerFile
+    splits its output) are summed; a task that wrote no rows is left
+    out, as a groupBy over the rows would leave it out."""
+    rows: dict[int, int] = {}
+    for uri in df.inputFiles():
+        m = _TASK_FILE.match(os.path.basename(uri))
+        if m is None:
+            raise ValueError(f"{uri} is not a Spark part file")
+        task = int(m.group(1))
+        rows[task] = rows.get(task, 0) + parquet_footer(uri)["rows"]
+    return [{"partition_id": t, "rows": n}
+            for t, n in sorted(rows.items()) if n]
+
+
+def _written_schema(out_dir: str) -> StructType:
+    """The schema run_stage wrote to out_dir, from one file's footer."""
+    first = min(f for f in os.listdir(out_dir) if f.endswith(".parquet"))
+    meta = parquet_footer(os.path.join(out_dir, first))["spark_schema"]
+    return StructType.fromJson(json.loads(meta))
 
 
 def run_stage(
@@ -79,7 +160,9 @@ def run_stage(
     man = read_manifest(out_dir)
     if not force and man and man.get("input_fingerprint") == input_fingerprint \
             and man.get("stage") == stage:
-        return spark.read.parquet(out_dir)
+        # the checkpoint is run_stage's own write, so its footer holds
+        # the schema: inferring it would run a footer-reading job
+        return spark.read.schema(_written_schema(out_dir)).parquet(out_dir)
 
     t0 = time.monotonic()
     df = build()
@@ -94,6 +177,8 @@ def run_stage(
         "n_rows": sum(p["rows"] for p in lineage),
         "n_partitions": len(lineage),
         "partitions": lineage,
+        "null_counts": _sum_null_counts(
+            [parquet_footer(f) for f in out.inputFiles()]),
         "wall_ms": int((time.monotonic() - t0) * 1000),
     }
     with open(_manifest_path(out_dir), "w") as f:
@@ -287,10 +372,14 @@ def run_stage_incremental(
                         ignore_errors=True)
 
     out = spark.read.parquet(out_dir)
-    lineage = (
-        out.groupBy(F.col(partition_col).cast("string").alias("_pk"))
-        .count().orderBy("_pk").collect()
-    )
+    # per-key rows from the footers under each <col>=<key>/ directory;
+    # _SAFE_KEY keeps the directory name equal to the string key
+    files = parquet_files(out_dir)
+    per_key: dict[str, int] = {}
+    for f in files:
+        k = f["partition"][partition_col]
+        per_key[k] = per_key.get(k, 0) + f["rows"]
+    lineage = sorted((k, n) for k, n in per_key.items() if n)
     manifest = {
         "stage": stage,
         "partition_col": partition_col,
@@ -298,12 +387,10 @@ def run_stage_incremental(
         "last_recomputed": changed,
         "last_removed": removed,
         "runs": (man or {}).get("runs", 0) + 1,
-        "n_rows": sum(int(r["count"]) for r in lineage),
+        "n_rows": sum(n for _k, n in lineage),
         "n_partitions": len(lineage),
-        "partitions": [
-            {"partition_key": r["_pk"], "rows": int(r["count"])}
-            for r in lineage
-        ],
+        "partitions": [{"partition_key": k, "rows": n} for k, n in lineage],
+        "null_counts": _sum_null_counts(files),
         "wall_ms": int((time.monotonic() - t0) * 1000),
     }
     with open(_manifest_path(out_dir), "w") as f:

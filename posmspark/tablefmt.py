@@ -39,6 +39,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from posmspark import lineage
+
 #: per-process staging counter; combined with the pid it makes every
 #: _write_data target unique even when two committers race to the same
 #: snapshot seq (the seq is only a human-readable hint in the dir name)
@@ -77,32 +79,6 @@ def snapshots(table_dir: str) -> list[dict]:
             with open(os.path.join(d, fn)) as f:
                 out.append(json.load(f))
     return out
-
-
-def _collect_files(data_dir: str) -> list[dict]:
-    """List parquet data files under one commit's data dir with row
-    counts from the parquet FOOTER (no data scan) and the hive
-    partition values carried in the path."""
-    import pyarrow.parquet as pq
-
-    files = []
-    for root, _dirs, fns in os.walk(data_dir):
-        for fn in sorted(fns):
-            if not fn.endswith(".parquet"):
-                continue
-            full = os.path.join(root, fn)
-            rel = os.path.relpath(full, data_dir)
-            parts = {}
-            for seg in rel.split(os.sep)[:-1]:
-                if "=" in seg:
-                    k, v = seg.split("=", 1)
-                    parts[k] = v
-            files.append({
-                "path": rel,
-                "partition": parts,
-                "rows": int(pq.ParquetFile(full).metadata.num_rows),
-            })
-    return files
 
 
 def _next_seq(table_dir: str) -> int:
@@ -168,7 +144,10 @@ def _write_data(df: DataFrame, table_dir: str, seq_hint: int,
     if partition_by:
         w = w.partitionBy(*partition_by)
     w.parquet(data_dir)
-    files = _collect_files(data_dir)
+    # row counts from the parquet footers (no data scan) and the hive
+    # partition values carried in each path
+    files = [{"path": f["path"], "partition": f["partition"],
+              "rows": f["rows"]} for f in lineage.parquet_files(data_dir)]
     return data_dir, files
 
 

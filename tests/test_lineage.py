@@ -3,6 +3,8 @@ stage manifests; kill-and-resume semantics; north-rule lineage rows)."""
 
 import json
 import os
+import re
+import uuid
 
 import pytest
 from pyspark.sql import functions as F
@@ -38,11 +40,73 @@ def test_stage_writes_manifest_and_resumes(spark, tmp_path):
     assert df3.count() == 100 and calls["n"] == 2
 
 
+def _count_jobs(spark, fn):
+    """(result of fn(), number of Spark jobs fn ran)."""
+    sc = spark.sparkContext
+    group = f"count-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_stage_runs_one_job_and_resume_none(spark, tmp_path):
+    """A checkpointed stage runs only its write job: lineage and null
+    counts come from the footers just written. Resuming reads the
+    schema from the checkpoint's footer, so it runs no job."""
+    out_dir = str(tmp_path / "stage_jobs")
+
+    def build():
+        return spark.range(0, 1000, 1, 7).withColumn("v", F.col("id") * 2)
+
+    _, n_write = _count_jobs(
+        spark, lambda: lineage.run_stage(spark, "j", "fp", out_dir, build))
+    out, n_resume = _count_jobs(
+        spark, lambda: lineage.run_stage(spark, "j", "fp", out_dir, build))
+    assert (n_write, n_resume) == (1, 0)
+    assert lineage.read_manifest(out_dir)["n_partitions"] == 7
+    assert out.count() == 1000
+
+
+def test_footer_lineage_matches_file_groupby(spark, tmp_path):
+    """Footer lineage equals the rows each write task put in its files
+    (groupBy(input_file_name()) mapped to the part-NNNNN task index),
+    with an empty task left out and maxRecordsPerFile splitting every
+    other task's output over several files."""
+    out_dir = str(tmp_path / "stage_files")
+
+    def build():
+        return spark.range(0, 1000, 1, 7).filter(
+            F.spark_partition_id() != 3)
+
+    key = "spark.sql.files.maxRecordsPerFile"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "40")
+    try:
+        out = lineage.run_stage(spark, "files", "fp", out_dir, build)
+    finally:
+        spark.conf.set(key, prev)
+    truth: dict[int, int] = {}
+    for r in out.groupBy(F.input_file_name().alias("f")).count().collect():
+        task = int(re.match(r"part-(\d+)-", os.path.basename(r["f"]))[1])
+        truth[task] = truth.get(task, 0) + r["count"]
+    parts = lineage.read_manifest(out_dir)["partitions"]
+    assert parts == [{"partition_id": t, "rows": n}
+                     for t, n in sorted(truth.items())]
+    assert [p["partition_id"] for p in parts] == [0, 1, 2, 4, 5, 6]
+    assert len(out.inputFiles()) > 2 * len(parts)
+    assert sum(p["rows"] for p in parts) == out.count()
+
+
 def test_stage_readback_matches_inferred_schema(spark, tmp_path):
     """run_stage reads its output back with the schema it wrote (no
-    footer-reading job): that schema, nullability and column metadata
-    included, must be the one a plain read infers; the lineage rows
-    come back in partition order."""
+    footer-reading job), and a resume with the schema stored in the
+    footer: both, nullability and column metadata included, must be
+    the one a plain read infers; the lineage rows come back in
+    partition order."""
     out_dir = str(tmp_path / "stage_schema")
 
     def build():
@@ -56,11 +120,18 @@ def test_stage_readback_matches_inferred_schema(spark, tmp_path):
         )
 
     out = lineage.run_stage(spark, "schema", "fp", out_dir, build)
-    assert out.schema == spark.read.parquet(out_dir).schema
+    inferred = spark.read.parquet(out_dir).schema
+    assert out.schema == inferred
     assert out.count() == 1000
-    parts = lineage.read_manifest(out_dir)["partitions"]
-    ids = [p["partition_id"] for p in parts]
-    assert ids == sorted(ids) and sum(p["rows"] for p in parts) == 1000
+    resumed = lineage.run_stage(spark, "schema", "fp", out_dir, build)
+    assert resumed.schema == inferred
+    assert resumed.count() == 1000
+    man = lineage.read_manifest(out_dir)
+    ids = [p["partition_id"] for p in man["partitions"]]
+    assert ids == sorted(ids) and man["n_rows"] == 1000
+    # st is nested; ts is written as INT96, whose chunks carry no
+    # statistics, so both are left out
+    assert man["null_counts"] == {"id": 0, "x": 0, "maybe": 666}
 
 
 def test_killed_stage_recomputes(spark, tmp_path):
@@ -187,6 +258,31 @@ def test_incremental_recomputes_only_changed_partition(spark, tmp_path):
     row = {r["country"]: r["sv"] for r in out.collect()}
     assert row["C5"] == sum(i * 7 + 1 for i in range(5, 320, 16))
     assert row["C0"] == sum(i * 7 for i in range(0, 320, 16))
+
+
+def test_incremental_manifest_rows_match_groupby(spark, tmp_path):
+    """Incremental lineage comes from the footers under each
+    <col>=<key>/ directory: after a mutate-and-rerun that rewrites one
+    partition, its rows, keys and order equal a groupBy of the
+    output."""
+    out_dir = str(tmp_path / "inc_rows")
+
+    def build(df):
+        return df.filter(F.col("v") % 3 != 0)
+
+    lineage.run_stage_incremental(
+        spark, "rows", _mk_input(spark, n_keys=5), out_dir, build, "country")
+    out = lineage.run_stage_incremental(
+        spark, "rows", _mk_input(spark, n_keys=5, mutate_key="C2"), out_dir,
+        build, "country")
+    man = lineage.read_manifest(out_dir)
+    assert man["last_recomputed"] == ["C2"]
+    want = [{"partition_key": r["country"], "rows": r["count"]}
+            for r in out.groupBy("country").count().orderBy("country")
+            .collect()]
+    assert man["partitions"] == want
+    assert man["n_rows"] == out.count() == sum(p["rows"] for p in want)
+    assert man["null_counts"] == {"id": 0, "v": 0}
 
 
 def test_incremental_removed_and_empty_keys(spark, tmp_path):
