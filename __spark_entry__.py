@@ -640,26 +640,50 @@ _SPATIAL_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
 }
 
 #: Driver-budget ordering (VERDICT r02 item 1): the driver verifies
-#: registry entries IN ORDER with a ~50-query budget. Rotation: every
-#: entry whose code changed with the shared parquet footer reader
-#: (lineage.parquet_files) comes FIRST (result-identical by
-#: construction, but the driver should re-prove that, not trust it);
+#: registry entries IN ORDER with a ~50-query budget. Rotation: the
+#: entries whose data come through prepare_boundaries or pip_join, now
+#: resolved by one shared first-match kernel, come FIRST, led by those
+#: whose oracle is independent of the boundary build (result-identical
+#: by construction, but the driver should re-prove that, not trust it);
 #: then the entries the previous order left past the budget; then the
 #: rows-only residue; the entries the previous order put first
 #: (re-proved then, unchanged since) fill the tail.
 _VERIFY_FIRST = [
-    # --- code changed: footer-read lineage and file listing
-    "incremental_manifest",    # manifest rows from footers
-    "table_snapshots",         # snapshot file rows from footers
-    # --- past the budget in the previous order
-    "byte_identity_audit",
+    # --- code changed: one first-match resolver, independent oracles
+    "pip_assignment",
+    "pip_tile_rollup",
     "problems_routing",
+    "shapefile_source",
+    "tile_clip_areas",
+    "cell_tile_stats",
+    "knn_cellring",
+    "streaming_tile_counts",
+    # --- code changed: built on prepare_boundaries or knn_bruteforce
+    "knn_topk_flat",
     "dissolve_parents",
     "residual_holes",
     "simplify_mesh_stats",
     "dual_export",
-    "zip_package_counts",
+    "poly_export",
     "topojson_arc_stats",
+    "zip_package_counts",
+    # --- past the budget in the previous order
+    "first_match",
+    "ann_ivf_probe_topk",
+    "repetition_stats",
+    "lang_quality",
+    "rand_indicators",
+    "problem_url",
+    "ann_lsh_topk",
+    "multimodal_features",
+    "streaming_dedup",
+    # --- rows-only residue: keep their rows fresh every round (their
+    # oracle-backed siblings cover the checkable semantics)
+    "topojson_export",
+    "zip_package_manifest",
+    "ann_ivf_topk",
+    # --- unchanged, verified in the previous order's budget window
+    "byte_identity_audit",
     "dedup_exact",
     "token_stats",
     "minhash_band_candidates",
@@ -669,12 +693,6 @@ _VERIFY_FIRST = [
     "simhash_pigeonhole_pairs",
     "embedding_cosine_dups",
     "embedding_cosine_dups_lsh",
-    # --- rows-only residue: keep their rows fresh every round (their
-    # oracle-backed siblings cover the checkable semantics)
-    "topojson_export",
-    "zip_package_manifest",
-    "ann_ivf_topk",
-    # --- unchanged, verified in the previous order's budget window
     "ann_cosine_topk",
     "case_bucket",
     "date_trunc_hourly",
@@ -703,26 +721,10 @@ _VERIFY_FIRST = [
     "unusable_anti_join",
     "hierarchy_join",
     "mapping_override",
-    "first_match",
-    "tile_clip_areas",
-    "ann_ivf_probe_topk",
-    "repetition_stats",
-    "lang_quality",
-    "rand_indicators",
-    "problem_url",
-    "ann_lsh_topk",
-    "multimodal_features",
-    "poly_export",
-    "shapefile_source",
-    "streaming_dedup",
-    # --- first in the previous order (cell encoder): re-proved then,
-    # unchanged since
-    "pip_assignment",
-    "pip_tile_rollup",
-    "cell_tile_stats",
-    "streaming_tile_counts",
-    "knn_cellring",
-    "knn_topk_flat",
+    # --- first in the previous order (footer-read lineage): re-proved
+    # then, unchanged since
+    "incremental_manifest",
+    "table_snapshots",
 ]
 
 

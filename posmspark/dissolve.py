@@ -1283,57 +1283,6 @@ def dissolve_by_parent(spark, prepared, child_level: int):
     return src.groupBy("is_in").applyInPandas(run, schema=schema)
 
 
-def simplify_mesh_by_parent(spark, prepared, child_level: int,
-                            tol: float = 0.05):
-    """Distributed watertight simplification: each parent's child mesh
-    is shared-edge-simplified in ONE applyInPandas task (parallelism
-    axis = parents, the same grouping the reference's per-country
-    topology build uses, proc_functions.sql:27-82). Borders BETWEEN
-    children of one parent stay watertight by construction. Borders
-    between DIFFERENT parents are simplified independently per group
-    (each side sees only its own group's junction decomposition), so
-    cross-parent edges can diverge — the same per-country limitation
-    the reference's per-country topojson build has; run the driver-side
-    shared_edge_simplify over the union mesh when cross-parent
-    watertightness is required.
-
-    Output: (osm_id, parent_osm_id, n_points_before, n_points_after,
-    geom_wkb) — one row per simplified child.
-    """
-    from pyspark.sql import types as T
-
-    bc = spark.sparkContext.broadcast(prepared.polys_by_id)
-    kids = prepared.levels_pdf.query(f"adminlevel == {child_level}")[
-        ["osm_id", "is_in"]]
-    src = spark.createDataFrame(kids)
-
-    schema = T.StructType([
-        T.StructField("osm_id", T.StringType()),
-        T.StructField("parent_osm_id", T.StringType()),
-        T.StructField("n_points_before", T.LongType()),
-        T.StructField("n_points_after", T.LongType()),
-        T.StructField("geom_wkb", T.BinaryType()),
-    ])
-
-    def run(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        polys_by_id = bc.value
-        mesh = {oid: polys_by_id[oid] for oid in pdf["osm_id"]
-                if oid in polys_by_id}
-        simp = shared_edge_simplify(mesh, tol=tol)
-        rows = []
-        for oid, polys in simp.items():
-            before = sum(len(r) for rings in mesh[oid] for r in rings)
-            after = sum(len(r) for rings in polys for r in rings)
-            rows.append({
-                "osm_id": oid, "parent_osm_id": key[0],
-                "n_points_before": before, "n_points_after": after,
-                "geom_wkb": geom.multipolygon_to_wkb(polys),
-            })
-        return pd.DataFrame(rows)
-
-    return src.groupBy("is_in").applyInPandas(run, schema=schema)
-
-
 #: SINGLE-SLOT per-executor-process cache of (vertex keys, split rings)
 #: for the current broadcast mesh — stage 1 and stage 3/5 tasks
 #: recompute nothing within one simplify_mesh_global run, and a new
@@ -1376,10 +1325,10 @@ def simplify_mesh_global(spark, prepared, child_level: int,
 
     Two-phase chain extraction over the WHOLE child mesh, so borders
     between children of DIFFERENT parents are simplified once globally
-    (the per-parent grouping in simplify_mesh_by_parent sees only its
-    own group's junction decomposition and can diverge on cross-parent
-    borders — the same limitation as the reference's per-country
-    topology build, proc_functions.sql:27-82, closed here):
+    (simplifying each parent's children on their own would see only
+    that group's junction decomposition and can diverge on
+    cross-parent borders — the same limitation as the reference's
+    per-country topology build, proc_functions.sql:27-82, closed here):
 
       1. per-feature tasks emit conformal edge rows (seg_key + ring
          position) from the broadcast dimension mesh

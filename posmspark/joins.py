@@ -5,10 +5,11 @@ Re-expresses the reference's three sequential full-input passes
 counties, each rebuilding an R-tree + prepared-geometry dict) as ONE
 scan of the fact table with a broadcast prepared index:
 
-  pages --fused ingest (byte-identity + geocode + cell)-->
-        --resolve kernel: searchsorted cell lookup, FULL cells decide
-          instantly, boundary cells run exact numpy PIP in
-          first-match (insert_order) order--> (osm_id_l0, l1, l2)
+  pages --ingest (textx.with_ingest_jvm: byte-identity + geotag +
+          cell)-->
+        --resolve kernel (_resolve_points): searchsorted cell lookup,
+          FULL cells decide instantly, boundary cells run exact numpy
+          PIP in first-match (insert_order) order--> (osm_id_l0, l1, l2)
 
 The build side (admin polygons) is a small dimension: the per-cell
 cover map (FULL winner + ordered boundary candidates per level) and the
@@ -21,7 +22,9 @@ code path serves Structured Streaming.
 First-match semantics: the reference returns the FIRST R-tree candidate
 that contains the point (exposm/utils.py:43-48), which depends on
 insertion order; we pin that with an explicit insert_order priority
-inside the cover map.
+inside the cover map. One resolver (_build_index + _resolve_points)
+applies that rule both on the driver, where prepare_boundaries finds
+each feature's country and parent, and per Arrow batch in pip_join.
 """
 
 from __future__ import annotations
@@ -80,70 +83,19 @@ class PreparedBoundaries:
     """
 
     def __init__(self, levels_pdf, problems_pdf, polys_by_id, cover_pdf,
-                 cover_res: int = COVER_RES, n_levels: int = 3):
+                 n_levels: int = 3):
         self.levels_pdf = levels_pdf      # osm_id,name,name_en,adminlevel,iso3166,is_in,insert_order
         self.problems_pdf = problems_pdf  # osm_id,reason,lon,lat
         self.polys_by_id = polys_by_id    # osm_id -> list[list[ndarray]] ring arrays
         self.cover_pdf = cover_pdf        # cell,osm_id,adminlevel,full,insert_order
-        self.cover_res = cover_res
         self.n_levels = n_levels          # hierarchy depth (reference: 1..10)
+        self._index = None
 
     def resolve_index(self):
-        """Vectorized resolution index (cached): sorted cell array +
-        per-level FULL-winner arrays + the (small) dict of boundary
-        cells that need exact-PIP candidates. Lookup is one
-        np.searchsorted over the whole Arrow batch — Python-per-row cost
-        is O(1); geometry work only on boundary-cell points.
-
-        Built with pure numpy (unique/searchsorted) — a per-cell pandas
-        groupby here was a 16-second serial driver stage per run.
-        """
-        if getattr(self, "_resolve_index", None) is not None:
-            return self._resolve_index
-        cov = self.cover_pdf.sort_values(["cell", "insert_order"],
-                                         kind="stable")
-        c_arr = cov["cell"].to_numpy(dtype=np.int64)
-        lvl = cov["adminlevel"].to_numpy(dtype=np.int64)
-        full = cov["full"].to_numpy(dtype=bool)
-        order = cov["insert_order"].to_numpy(dtype=np.int64)
-        osm = cov["osm_id"].to_numpy(dtype=object)
-
-        nl = self.n_levels
-        cells_sorted = np.unique(c_arr)
-        n = len(cells_sorted)
-        f = [np.full(n, None, dtype=object) for _ in range(nl)]
-        f_ord = [np.full(n, np.iinfo(np.int64).max, dtype=np.int64)
-                 for _ in range(nl)]
-        for lv in range(nl):
-            m = (lvl == lv) & full
-            if m.any():
-                cs, first = np.unique(c_arr[m], return_index=True)
-                pos = np.searchsorted(cells_sorted, cs)
-                f[lv][pos] = osm[m][first]
-                f_ord[lv][pos] = order[m][first]
-
-        # boundary candidates: partial rows with insert_order below the
-        # FULL winner's (only those can override under first-match)
-        partials: dict[int, list] = {}
-        for lv in range(nl):
-            m = (lvl == lv) & ~full
-            if not m.any():
-                continue
-            cs = c_arr[m]
-            pos = np.searchsorted(cells_sorted, cs)
-            keep = order[m] < f_ord[lv][pos]
-            for cell, od, oid in zip(cs[keep], order[m][keep], osm[m][keep]):
-                ent = partials.setdefault(int(cell), [[] for _ in range(nl)])
-                ent[lv].append((int(od), oid))
-        # final shape: cell -> n_levels-tuple of (f_osm, sorted partials)
-        pmap = {}
-        for cell, lists in partials.items():
-            i = int(np.searchsorted(cells_sorted, cell))
-            pmap[cell] = tuple(
-                (f[lv][i], tuple(sorted(lists[lv]))) for lv in range(nl)
-            )
-        self._resolve_index = (cells_sorted, f, pmap)
-        return self._resolve_index
+        """The all-levels first-match index over cover_pdf (built once)."""
+        if self._index is None:
+            self._index = _build_index(self.cover_pdf, self.n_levels)
+        return self._index
 
     def levels_df(self, spark: SparkSession) -> DataFrame:
         return spark.createDataFrame(self.levels_pdf)
@@ -156,103 +108,146 @@ class PreparedBoundaries:
         return spark.createDataFrame(self.cover_pdf)
 
 
-def _first_match_index(frame: pd.DataFrame, covers_for, cover_res=COVER_RES):
-    """Cell-cover first-match index over one level's polygons.
-
-    NOTE: this is the single-level, driver-side numpy twin of
-    PreparedBoundaries.resolve_index + _resolve_udf (all levels, Arrow
-    batches). The FULL-winner / ordered-partial semantics MUST stay
-    identical in both — the numpy-oracle goldens in tests/test_spine.py
-    and tests/test_boundaries.py pin them against the same brute-force
-    first-match definition.
-
-    Returns (cells_sorted, win, partials, cover_res):
-      win[i]        — osm_id of the lowest-insert_order polygon whose
-                      FULL cells include cells_sorted[i] (None if none)
-      partials[c]   — insert_order-sorted (order, osm_id) candidates
-                      whose BOUNDARY crosses cell c with order below the
-                      FULL winner's (only those can beat it first-match)
-    """
-    rows_cells, rows_osm, rows_order, rows_full = [], [], [], []
+def _cover_table(frame: pd.DataFrame, polys_by_id) -> pd.DataFrame:
+    """Cell cover of every polygon in one level frame, one row per
+    (cell, polygon part): (cell, osm_id, adminlevel, full,
+    insert_order), FULL vs PARTIAL as cells.cover_polygon classifies."""
+    # each list starts with a typed empty array, so a frame without
+    # polygons yields an empty table of the same dtypes
+    parts = {"cell": [np.empty(0, np.int64)],
+             "osm_id": [np.empty(0, object)],
+             "adminlevel": [np.empty(0, np.int32)],
+             "full": [np.empty(0, bool)],
+             "insert_order": [np.empty(0, np.int64)]}
     for r in frame.itertuples(index=False):
-        for cc, full in covers_for(r.osm_id):
-            rows_cells.append(cc)
-            rows_osm.append(np.repeat(r.osm_id, len(cc)))
-            rows_order.append(np.full(len(cc), r.insert_order,
-                                      dtype=np.int64))
-            rows_full.append(full)
-    if not rows_cells:
-        return (np.empty(0, dtype=np.int64), np.empty(0, dtype=object),
-                {}, cover_res)
-    c_arr = np.concatenate(rows_cells)
-    osm = np.concatenate(rows_osm)
-    order = np.concatenate(rows_order)
-    full = np.concatenate(rows_full)
-    sort = np.lexsort((order, c_arr))
-    c_arr, osm, order, full = c_arr[sort], osm[sort], order[sort], full[sort]
+        for rings in polys_by_id[r.osm_id]:
+            cc, full = cells.cover_polygon(rings, COVER_RES)
+            parts["cell"].append(cc)
+            parts["osm_id"].append(np.repeat(r.osm_id, len(cc)))
+            parts["adminlevel"].append(
+                np.full(len(cc), r.adminlevel, dtype=np.int32))
+            parts["full"].append(full)
+            parts["insert_order"].append(
+                np.full(len(cc), r.insert_order, dtype=np.int64))
+    return pd.DataFrame({k: np.concatenate(v) for k, v in parts.items()})
+
+
+def _build_index(cover: pd.DataFrame, n_levels: int):
+    """First-match resolution index over a cover table: sorted cell
+    array + per-level FULL-winner arrays + the (small) dict of boundary
+    cells that need exact-PIP candidates. Lookup is one np.searchsorted
+    over the whole Arrow batch — Python-per-row cost is O(1); geometry
+    work only on boundary-cell points.
+
+    Returns (cells_sorted, win, partials):
+      win[lv][i]      — osm_id of the lowest-insert_order level-lv
+                        polygon whose FULL cells include cells_sorted[i]
+                        (None if none)
+      partials[c][lv] — insert_order-sorted (order, osm_id) level-lv
+                        candidates whose BOUNDARY crosses cell c with
+                        order below the FULL winner's (only those can
+                        beat it first-match)
+
+    Built with pure numpy (unique/searchsorted) — a per-cell pandas
+    groupby here was a 16-second serial driver stage per run.
+    """
+    srt = np.lexsort((cover["insert_order"].to_numpy(dtype=np.int64),
+                      cover["cell"].to_numpy(dtype=np.int64)))
+    c_arr = cover["cell"].to_numpy(dtype=np.int64)[srt]
+    lvl = cover["adminlevel"].to_numpy(dtype=np.int64)[srt]
+    full = cover["full"].to_numpy(dtype=bool)[srt]
+    order = cover["insert_order"].to_numpy(dtype=np.int64)[srt]
+    osm = cover["osm_id"].to_numpy(dtype=object)[srt]
 
     cells_sorted = np.unique(c_arr)
     n = len(cells_sorted)
-    win = np.full(n, None, dtype=object)
-    win_ord = np.full(n, np.iinfo(np.int64).max, dtype=np.int64)
-    m = full
-    if m.any():
-        cs, first = np.unique(c_arr[m], return_index=True)
-        pos = np.searchsorted(cells_sorted, cs)
-        win[pos] = osm[m][first]
-        win_ord[pos] = order[m][first]
+    win = [np.full(n, None, dtype=object) for _ in range(n_levels)]
+    win_ord = [np.full(n, np.iinfo(np.int64).max, dtype=np.int64)
+               for _ in range(n_levels)]
+    for lv in range(n_levels):
+        m = (lvl == lv) & full
+        if m.any():
+            cs, first = np.unique(c_arr[m], return_index=True)
+            pos = np.searchsorted(cells_sorted, cs)
+            win[lv][pos] = osm[m][first]
+            win_ord[lv][pos] = order[m][first]
+
+    # boundary candidates: partial rows with insert_order below the
+    # FULL winner's (only those can override under first-match)
     partials: dict[int, list] = {}
-    m = ~full
-    if m.any():
-        pos = np.searchsorted(cells_sorted, c_arr[m])
-        keep = order[m] < win_ord[pos]
-        for cell, od, oid in zip(c_arr[m][keep], order[m][keep],
+    for lv in range(n_levels):
+        m = (lvl == lv) & ~full
+        if not m.any():
+            continue
+        cs = c_arr[m]
+        pos = np.searchsorted(cells_sorted, cs)
+        keep = order[m] < win_ord[lv][pos]
+        for cell, od, oid in zip(cs[keep].tolist(), order[m][keep].tolist(),
                                  osm[m][keep]):
-            partials.setdefault(int(cell), []).append((int(od), oid))
-    for cell in partials:
-        partials[cell].sort()
-    return cells_sorted, win, partials, cover_res
+            ent = partials.get(cell)
+            if ent is None:
+                ent = partials[cell] = [[] for _ in range(n_levels)]
+            ent[lv].append((od, oid))
+    for lists in partials.values():
+        for cand in lists:
+            cand.sort()
+    return cells_sorted, win, partials
 
 
-def _first_match_batch(lon: np.ndarray, lat: np.ndarray, index,
-                       polys_by_id) -> np.ndarray:
-    """Vectorized first-match (lowest insert_order containing polygon)
-    for arrays of points — the same FULL-winner/boundary-candidate
-    resolution the PIP join kernel uses, driver-side."""
-    cells_sorted, win, partials, cover_res = index
-    out = np.full(len(lon), None, dtype=object)
+def _resolve_points(lon: np.ndarray, lat: np.ndarray, index, polys,
+                    n_levels: int) -> np.ndarray:
+    """First-match (lowest insert_order containing polygon) per level
+    for arrays of points, as an (n, n_levels) object array of osm_ids:
+
+    1. the coarse cell is computed IN numpy from lon/lat, then
+       np.searchsorted maps every point to its index row — no per-cell
+       Python
+    2. per-level FULL winners fancy-index straight into the output
+    3. only points in BOUNDARY cells (the small partials dict) run the
+       exact PIP, grouped per cell, points-vectorized per candidate
+       polygon, in first-match (insert_order) order; a point no
+       candidate contains keeps the FULL winner already written
+    """
+    cells_sorted, win, partials = index
+    out = np.full((len(lon), n_levels), None, dtype=object)
     if not len(cells_sorted):
         return out
-    jc = cells.encode(np.asarray(lon, dtype=np.float64),
-                      np.asarray(lat, dtype=np.float64), cover_res)
-    pos = np.searchsorted(cells_sorted, jc)
+    jci = cells.encode(lon, lat, COVER_RES)
+    pos = np.searchsorted(cells_sorted, jci)
     pos_c = np.clip(pos, 0, len(cells_sorted) - 1)
-    hit = (jc >= 0) & (cells_sorted[pos_c] == jc)
-    out[hit] = win[pos_c[hit]]
+    hit = (jci >= 0) & (cells_sorted[pos_c] == jci)
+    for lv in range(n_levels):
+        out[hit, lv] = win[lv][pos_c[hit]]
+    if not partials:
+        return out
     hit_idx = np.nonzero(hit)[0]
-    hcells = jc[hit_idx]
-    bmask = np.fromiter((int(c) in partials for c in hcells), dtype=bool,
-                        count=len(hcells))
-    for cell in np.unique(hcells[bmask]):
-        cand = partials[int(cell)]
-        ix = hit_idx[hcells == cell]
-        undecided = np.ones(len(ix), dtype=bool)
-        for _ord, oid in cand:
-            if not undecided.any():
-                break
-            sub = ix[undecided]
-            inside = geom.points_in_multipolygon(
-                lon[sub], lat[sub], polys_by_id[oid])
-            if inside.any():
-                out[sub[inside]] = oid
-                rem = np.where(undecided)[0]
-                undecided[rem[inside]] = False
+    hit_cells = jci[hit_idx]
+    # restrict to boundary cells present in this batch
+    border_mask = np.fromiter(
+        (int(c) in partials for c in hit_cells), dtype=bool,
+        count=len(hit_cells))
+    for cell in np.unique(hit_cells[border_mask]):
+        ent = partials[int(cell)]
+        ix = hit_idx[hit_cells == cell]
+        for lv, cand in enumerate(ent):
+            if not cand:
+                continue
+            undecided = np.ones(len(ix), dtype=bool)
+            for _ord, osm in cand:  # insert_order-sorted
+                if not undecided.any():
+                    break
+                sub = ix[undecided]
+                inside = geom.points_in_multipolygon(
+                    lon[sub], lat[sub], polys[osm])
+                if inside.any():
+                    out[sub[inside], lv] = osm
+                    rem = np.where(undecided)[0]
+                    undecided[rem[inside]] = False
     return out
 
 
 def prepare_boundaries(boundaries_pdf: pd.DataFrame,
                        mapping_pdf: pd.DataFrame,
-                       cover_res: int = COVER_RES,
                        n_levels: int = 3) -> PreparedBoundaries:
     """Build the admin hierarchy from raw boundary rows.
 
@@ -323,29 +318,24 @@ def prepare_boundaries(boundaries_pdf: pd.DataFrame,
     l0["adminlevel"] = 0
     l0["is_in"] = None
 
-    # Cell covers are computed once per feature and reused for both the
-    # per-level first-match index and the final cover table.
-    cover_cache: dict[str, list] = {}
-
-    def covers_for(oid: str) -> list:
-        if oid not in cover_cache:
-            cover_cache[oid] = [
-                cells.cover_polygon(rings, cover_res)
-                for rings in polys_by_id[oid]
-            ]
-        return cover_cache[oid]
-
     # levels 1..n-1: rep-point PIP into country (tag lookup) + direct
     # parent at the level below; a missing country or parent drops the
     # feature (extract.py:241-243, 312-341 — the containment-chain O14).
-    # Parents are probed through a cell-cover index (FULL-cell winner +
-    # insert-order boundary candidates, the engine's own resolve-map
-    # trick), NOT a linear scan over every parent polygon — the planet
-    # has ~100k admin features and the linear scan was the build's
-    # quadratic term (VERDICT r01 item 8).
-    l0_index = _first_match_index(l0, covers_for)
+    # Parents are probed through the same cell-cover first-match index
+    # the PIP join resolves with (one single-level index per level),
+    # NOT a linear scan over every parent polygon — the planet has
+    # ~100k admin features and the linear scan was the build's
+    # quadratic term (VERDICT r01 item 8). Each level's cover table is
+    # computed once: it keys that index and is a slice of cover_pdf.
+    def level_index(cover: pd.DataFrame):
+        return _build_index(cover.assign(adminlevel=0), 1)
+
+    def first_match(x, y, index) -> np.ndarray:
+        return _resolve_points(x, y, index, polys_by_id, 1)[:, 0]
+
     level_frames = [l0]
-    level_indexes = [l0_index]
+    level_covers = [_cover_table(l0, polys_by_id)]
+    l0_index = level_index(level_covers[0])
     assigned = set(l0.osm_id)
     # a feature that only lands at level L is a candidate at every level
     # before it — compute its representative point once, not per level
@@ -359,20 +349,13 @@ def prepare_boundaries(boundaries_pdf: pd.DataFrame,
     for lv in range(1, n_levels):
         cand = feats[~feats.osm_id.isin(assigned)]
         if not len(cand):
-            level_frames.append(pd.DataFrame())
-            level_indexes.append(None)
-            continue
+            break
         reps = np.array([rep_for(oid) for oid in cand.osm_id],
                         dtype=np.float64)
-        country = _first_match_batch(
-            reps[:, 0], reps[:, 1], l0_index, polys_by_id)
-        if lv == 1:
-            parent = country
-        elif level_indexes[lv - 1] is None:
-            parent = np.full(len(cand), None, dtype=object)
-        else:
-            parent = _first_match_batch(
-                reps[:, 0], reps[:, 1], level_indexes[lv - 1], polys_by_id)
+        x, y = reps[:, 0], reps[:, 1]
+        country = first_match(x, y, l0_index)
+        parent = (country if lv == 1
+                  else first_match(x, y, level_index(level_covers[lv - 1])))
         rows_lv = []
         for i, r in enumerate(cand.itertuples(index=False)):
             if country[i] is None or r.raw_level != tag_for(country[i], lv):
@@ -383,8 +366,7 @@ def prepare_boundaries(boundaries_pdf: pd.DataFrame,
                 {**r._asdict(), "adminlevel": lv, "is_in": parent[i]})
         frame = pd.DataFrame(rows_lv)
         level_frames.append(frame)
-        level_indexes.append(
-            _first_match_index(frame, covers_for) if len(frame) else None)
+        level_covers.append(_cover_table(frame, polys_by_id))
         if len(frame):
             assigned |= set(frame.osm_id)
 
@@ -397,35 +379,7 @@ def prepare_boundaries(boundaries_pdf: pd.DataFrame,
         # degenerate input (e.g. no admin_level=='2' rows at all): an
         # empty typed levels table, not a concat crash (ADVICE r02)
         levels = pd.DataFrame(columns=level_cols)
-
-    # cell cover per retained boundary (FULL vs PARTIAL classification)
-    cov_rows = {"cell": [], "osm_id": [], "adminlevel": [], "full": [],
-                "insert_order": []}
-    for r in levels.itertuples(index=False):
-        for cc, full in covers_for(r.osm_id):
-            cov_rows["cell"].append(cc)
-            cov_rows["osm_id"].append(np.repeat(r.osm_id, len(cc)))
-            cov_rows["adminlevel"].append(np.full(len(cc), r.adminlevel))
-            cov_rows["full"].append(full)
-            cov_rows["insert_order"].append(np.full(len(cc), r.insert_order))
-    if cov_rows["cell"]:
-        cover = pd.DataFrame(
-            {
-                "cell": np.concatenate(cov_rows["cell"]),
-                "osm_id": np.concatenate(cov_rows["osm_id"]),
-                "adminlevel": np.concatenate(cov_rows["adminlevel"]).astype(np.int32),
-                "full": np.concatenate(cov_rows["full"]),
-                "insert_order": np.concatenate(cov_rows["insert_order"]).astype(np.int64),
-            }
-        )
-    else:
-        cover = pd.DataFrame({
-            "cell": pd.Series(dtype=np.int64),
-            "osm_id": pd.Series(dtype=object),
-            "adminlevel": pd.Series(dtype=np.int32),
-            "full": pd.Series(dtype=bool),
-            "insert_order": pd.Series(dtype=np.int64),
-        })
+    cover = pd.concat(level_covers, ignore_index=True)
 
     problems_pdf = pd.DataFrame(
         problems, columns=["osm_id", "name", "reason", "lon", "lat"]
@@ -433,7 +387,7 @@ def prepare_boundaries(boundaries_pdf: pd.DataFrame,
     retained = set(levels.osm_id)
     keep_polys = {k: v for k, v in polys_by_id.items() if k in retained}
     return PreparedBoundaries(levels, problems_pdf, keep_polys, cover,
-                              cover_res, n_levels=n_levels)
+                              n_levels=n_levels)
 
 
 # ---------------------------------------------------------------------------
@@ -447,61 +401,18 @@ def _resolve_schema(n_levels: int) -> T.StructType:
     ])
 
 
-def _resolve_udf(bc_index, bc_polys, cover_res: int, n_levels: int = 3):
-    """The whole assignment as one vectorized kernel per Arrow batch:
-
-    1. the coarse cell is computed IN numpy from lon/lat (nullable int64
-       cells would degrade to float64 across Arrow and lose the high
-       res-tag bits), then np.searchsorted maps every point to its
-       cover-map row — no per-cell Python
-    2. per-level FULL winners fancy-index straight into the output
-    3. only points in BOUNDARY cells (the small partials dict) run the
-       exact PIP, grouped per cell, points-vectorized per candidate
-       polygon, in first-match (insert_order) order
-    """
+def _resolve_udf(bc_index, bc_polys, n_levels: int = 3):
+    """The whole assignment as one vectorized kernel per Arrow batch
+    (_resolve_points). The coarse cell is computed IN numpy from
+    lon/lat: nullable int64 cells would degrade to float64 across Arrow
+    and lose the high res-tag bits."""
 
     @pandas_udf(_resolve_schema(n_levels))
     def resolve(lon: pd.Series, lat: pd.Series) -> pd.DataFrame:
-        cells_sorted, f_levels, partials = bc_index.value
-        polys = bc_polys.value
-        n = len(lon)
-        out = np.full((n, n_levels), None, dtype=object)
-        lon_f = lon.to_numpy(dtype=np.float64, na_value=np.nan)
-        lat_f = lat.to_numpy(dtype=np.float64, na_value=np.nan)
-        jci = cells.encode(lon_f, lat_f, cover_res)
-        ok = jci >= 0
-        pos = np.searchsorted(cells_sorted, jci)
-        pos_c = np.clip(pos, 0, len(cells_sorted) - 1)
-        hit = ok & (cells_sorted[pos_c] == jci)
-        for lv in range(n_levels):
-            out[hit, lv] = f_levels[lv][pos_c[hit]]
-        if partials:
-            lon_np, lat_np = lon_f, lat_f
-            hit_idx = np.nonzero(hit)[0]
-            hit_cells = jci[hit_idx]
-            # restrict to boundary cells present in this batch
-            border_mask = np.fromiter(
-                (int(c) in partials for c in hit_cells), dtype=bool,
-                count=len(hit_cells))
-            for cell in np.unique(hit_cells[border_mask]):
-                ent = partials[int(cell)]
-                ix = hit_idx[hit_cells == cell]
-                for lv in range(n_levels):
-                    f_osm, cand = ent[lv]
-                    if not cand:
-                        continue
-                    undecided = np.ones(len(ix), dtype=bool)
-                    for _ord, osm in cand:  # insert_order-sorted
-                        if not undecided.any():
-                            break
-                        sub = ix[undecided]
-                        inside = geom.points_in_multipolygon(
-                            lon_np[sub], lat_np[sub], polys[osm])
-                        if inside.any():
-                            out[sub[inside], lv] = osm
-                            rem = np.where(undecided)[0]
-                            undecided[rem[inside]] = False
-                    # losers keep the FULL winner already written (f_osm)
+        out = _resolve_points(
+            lon.to_numpy(dtype=np.float64, na_value=np.nan),
+            lat.to_numpy(dtype=np.float64, na_value=np.nan),
+            bc_index.value, bc_polys.value, n_levels)
         return pd.DataFrame(
             {f"osm_id_l{lv}": out[:, lv] for lv in range(n_levels)}
         )
@@ -513,19 +424,18 @@ def _resolve_udf(bc_index, bc_polys, cover_res: int, n_levels: int = 3):
 
 
 def pip_join(points: DataFrame, prepared: PreparedBoundaries,
-             spark: SparkSession, point_key: str = "url",
-             keep_unmatched: bool = True) -> DataFrame:
+             spark: SparkSession, keep_unmatched: bool = True) -> DataFrame:
     """Assign every point its containing admin polygon per level.
 
-    points must carry (point_key, lon, lat[, cell]). Output: input
-    columns + cell + osm_id_l0/l1/l2.
+    points must carry (lon, lat[, cell]). Output: input columns + cell +
+    osm_id_l0..l{n_levels-1}.
 
     Plan shape: MAP-ONLY. The prepared per-cell cover map (FULL winner +
     boundary candidates per level, SURVEY.md O11) and the prepared ring
     arrays ship via sc.broadcast — the Spark-native form of the
     reference's in-process R-tree + prep(geom) dict (extract.py:75-77,
-    152-155) — and one vectorized pandas UDF resolves all three levels
-    per point. No join, no shuffle, no window: the 100 TB fact table
+    152-155) — and one vectorized pandas UDF resolves every level per
+    point. No join, no shuffle, no window: the 100 TB fact table
     streams through map tasks once, and the operator is stateless, so
     the SAME code path serves Structured Streaming (streaming.py).
 
@@ -538,8 +448,7 @@ def pip_join(points: DataFrame, prepared: PreparedBoundaries,
 
     lcols = [f"osm_id_l{lv}" for lv in range(prepared.n_levels)]
     pts = points if "cell" in points.columns else with_cell(points)
-    resolve = _resolve_udf(bc_index, bc_polys, prepared.cover_res,
-                           prepared.n_levels)
+    resolve = _resolve_udf(bc_index, bc_polys, prepared.n_levels)
     r = pts.withColumn("_r", resolve(F.col("lon"), F.col("lat")))
     out = r.select("*", *[f"_r.{c}" for c in lcols]).drop("_r")
     if keep_unmatched:
@@ -555,7 +464,7 @@ def pip_join(points: DataFrame, prepared: PreparedBoundaries,
 
 
 def knn_bruteforce(points: DataFrame, sites_pdf: pd.DataFrame, k: int,
-                   spark: SparkSession, point_key: str = "url") -> DataFrame:
+                   spark: SparkSession) -> DataFrame:
     """Exact kNN vs a broadcast site table — the correctness oracle.
 
     sites_pdf: (site_id, lon, lat). A vectorized pandas UDF computes the
@@ -656,7 +565,7 @@ def knn_cellring(points: DataFrame, sites_pdf: pd.DataFrame, k: int,
             # exactness must hold unconditionally.
             done = knn_bruteforce(
                 unresolved.select(point_key, "lon", "lat"),
-                sites_pdf, k, spark, point_key,
+                sites_pdf, k, spark,
             ).select(point_key, "knn").localCheckpoint()
             resolved = done if resolved is None else resolved.unionByName(done)
             break

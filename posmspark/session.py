@@ -49,7 +49,7 @@ def get_spark(
     return spark
 
 
-def spread_input(df, min_parts: int | None = None):
+def spread_input(df):
     """Round-robin repartition an input whose SCAN cannot parallelize —
     the driver fixtures are single-row-group parquet files, so every
     downstream narrow operator (shingling, md5, regexp) would otherwise
@@ -65,7 +65,7 @@ def spread_input(df, min_parts: int | None = None):
     (the hash pays the same analysis the probe does), so the probe
     stays direct."""
     sc = df.sparkSession.sparkContext
-    target = min_parts or sc.defaultParallelism
+    target = sc.defaultParallelism
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df

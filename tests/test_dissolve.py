@@ -211,39 +211,6 @@ def test_residual_by_parent_no_arrow(spark):
     assert by_parent["R1100"]["status"] == "complete"
 
 
-def test_simplify_mesh_by_parent_distributed(spark):
-    """Distributed per-parent shared-edge simplify: results equal the
-    driver-side simplifier per group, and each parent's simplified
-    child mesh still dissolves to the parent's own geometry."""
-    from posmspark.dissolve import simplify_mesh_by_parent
-    from posmspark.joins import prepare_boundaries
-
-    prepared = prepare_boundaries(
-        synth.gen_boundaries_pdf(), synth.gen_admin_mapping_pdf()
-    )
-    rows = simplify_mesh_by_parent(spark, prepared, child_level=2,
-                                   tol=0.05).collect()
-    got = {r["osm_id"]: r for r in rows}
-
-    kids = prepared.levels_pdf.query("adminlevel == 2")
-    assert set(got) == set(kids.osm_id)
-    for parent, group in kids.groupby("is_in"):
-        mesh = {oid: prepared.polys_by_id[oid] for oid in group.osm_id}
-        exp = dissolve.shared_edge_simplify(mesh, tol=0.05)
-        back = {}
-        for oid in group.osm_id:
-            r = got[oid]
-            assert r["parent_osm_id"] == parent
-            assert r["n_points_after"] <= r["n_points_before"]
-            back[oid] = geom.wkb_to_multipolygon(bytes(r["geom_wkb"]))
-            for gp, ep in zip(back[oid], exp[oid]):
-                for gr, er in zip(gp, ep):
-                    assert np.array_equal(gr, er), oid
-        # watertight: children still dissolve to one polygon
-        u = dissolve.dissolve_union(back)
-        assert len(u) == 1, parent
-
-
 def test_shared_edge_simplify_enclave_watertight():
     """Review regression: an enclave (B exactly fills A's hole) shares
     a border that is a WHOLE closed ring with constant owner-set. Both

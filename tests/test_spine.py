@@ -216,7 +216,19 @@ def test_pip_join_random_hierarchy_fuzz(spark):
     """r03 fuzz class: the cover-map + PIP assignment must match the
     first-insert_order-match oracle on RANDOM hierarchies too — BSP
     countries at irrational coords, shuffled input order, overlapping
-    duplicate level-1 regions (8-seed external run clean; 2 pinned)."""
+    duplicate level-1 regions (8-seed external run clean; 2 pinned).
+    The hierarchy itself is checked against the same oracle: every
+    level >= 1 row's is_in and country come from its representative
+    point."""
+    mapping = synth.gen_admin_mapping_pdf()
+    overrides = mapping.set_index("country_osm_id")
+
+    def tag_for(country, level):
+        key = f"admin_level_{level}"
+        if country in overrides.index:
+            return str(int(overrides.loc[country, key]))
+        return str(synth.ADMIN_DEFAULTS[key])
+
     for seed in (0, 3):
         rng = np.random.default_rng(seed)
         rows, order = [], iter(range(10000))
@@ -254,7 +266,7 @@ def test_pip_join_random_hierarchy_fuzz(spark):
             cid += 1
         bpdf = pd.DataFrame(rows).sample(
             frac=1, random_state=seed).reset_index(drop=True)
-        prepared = prepare_boundaries(bpdf, synth.gen_admin_mapping_pdf())
+        prepared = prepare_boundaries(bpdf, mapping)
 
         prng = np.random.default_rng(seed + 999)
         lon = np.concatenate([prng.uniform(-10, 100, 150),
@@ -285,6 +297,17 @@ def test_pip_join_random_hierarchy_fuzz(spark):
                 exp = oracle(row.lon, row.lat, lv)
                 assert row[col] == exp or (
                     exp is None and pd.isna(row[col])), (seed, url, lv)
+
+        raw_level = dict(zip(bpdf.osm_id, bpdf.admin_level.astype(str)))
+        children = prepared.levels_pdf[prepared.levels_pdf.adminlevel >= 1]
+        assert set(children.adminlevel) == {1, 2}, seed
+        for r in children.itertuples(index=False):
+            x, y = geom.representative_point(prepared.polys_by_id[r.osm_id])
+            assert r.is_in == oracle(x, y, r.adminlevel - 1), (seed, r.osm_id)
+            country = oracle(x, y, 0)
+            assert country is not None, (seed, r.osm_id)
+            assert raw_level[r.osm_id] == tag_for(country, r.adminlevel), (
+                seed, r.osm_id)
 
 
 def test_ingest_kernels_agree_on_adversarial_html(spark):
