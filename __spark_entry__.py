@@ -340,13 +340,10 @@ def _q_dissolve_parents(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_simplify_mesh_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """G13 distributed AND cross-parent watertight (round 3): global
-    two-phase chain extraction — one groupBy(seg_key) for global
-    owner-sets, one Douglas-Peucker per distinct border chain, rings
-    reassembled per feature — so borders between children of DIFFERENT
-    parents simplify identically (equivalence to the driver-side
-    shared_edge_simplify over the union mesh pinned in
-    tests/test_dissolve.py)."""
+    """G13 cross-parent watertight: simplify_mesh_global runs
+    shared_edge_simplify once over the whole level-2 mesh on the
+    driver, so borders between children of DIFFERENT parents simplify
+    identically (pinned in tests/test_dissolve.py)."""
     from posmspark import synth
     from posmspark.dissolve import simplify_mesh_global
     from posmspark.joins import prepare_boundaries
@@ -649,62 +646,17 @@ _SPATIAL_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
 #: rows-only residue; the entries the previous order put first
 #: (re-proved then, unchanged since) fill the tail.
 _VERIFY_FIRST = [
-    # --- code changed: one first-match resolver, independent oracles
-    "pip_assignment",
-    "pip_tile_rollup",
-    "problems_routing",
-    "shapefile_source",
-    "tile_clip_areas",
-    "cell_tile_stats",
-    "knn_cellring",
-    "streaming_tile_counts",
-    # --- code changed: built on prepare_boundaries or knn_bruteforce
-    "knn_topk_flat",
-    "dissolve_parents",
-    "residual_holes",
+    # --- code changed: one shared-edge simplifier, its chain cutter, the
+    # residual classifier, the multimodal decoder and the n-gram helper
     "simplify_mesh_stats",
     "dual_export",
-    "poly_export",
+    "residual_holes",
     "topojson_arc_stats",
-    "zip_package_counts",
-    # --- past the budget in the previous order
-    "first_match",
-    "ann_ivf_probe_topk",
-    "repetition_stats",
-    "lang_quality",
-    "rand_indicators",
-    "problem_url",
-    "ann_lsh_topk",
     "multimodal_features",
-    "streaming_dedup",
-    # --- rows-only residue: keep their rows fresh every round (their
-    # oracle-backed siblings cover the checkable semantics)
-    "topojson_export",
-    "zip_package_manifest",
-    "ann_ivf_topk",
-    # --- unchanged, verified in the previous order's budget window
-    "byte_identity_audit",
-    "dedup_exact",
-    "token_stats",
     "minhash_band_candidates",
     "minhash_verified_dups",
     "ngram_jaccard_pairs",
-    "simhash_near_pairs",
-    "simhash_pigeonhole_pairs",
-    "embedding_cosine_dups",
-    "embedding_cosine_dups_lsh",
-    "ann_cosine_topk",
-    "case_bucket",
-    "date_trunc_hourly",
-    "distinct_exact",
-    "doc_fingerprint",
-    "embedding_label_centroids",
-    "json_extract",
-    "langid_ngram",
-    "pivot_status",
-    "pricing_summary",
-    "rollup_hierarchy",
-    "sessionize",
+    # --- past the budget in the previous order
     "set_difference",
     "snap_to_grid",
     "string_funcs",
@@ -721,10 +673,53 @@ _VERIFY_FIRST = [
     "unusable_anti_join",
     "hierarchy_join",
     "mapping_override",
-    # --- first in the previous order (footer-read lineage): re-proved
-    # then, unchanged since
     "incremental_manifest",
     "table_snapshots",
+    # --- rows-only residue: keep their rows fresh every round (their
+    # oracle-backed siblings cover the checkable semantics)
+    "topojson_export",
+    "zip_package_manifest",
+    "ann_ivf_topk",
+    # --- unchanged, verified in the previous order's budget window
+    "pip_assignment",
+    "pip_tile_rollup",
+    "problems_routing",
+    "shapefile_source",
+    "tile_clip_areas",
+    "cell_tile_stats",
+    "knn_cellring",
+    "streaming_tile_counts",
+    "knn_topk_flat",
+    "dissolve_parents",
+    "poly_export",
+    "zip_package_counts",
+    "first_match",
+    "ann_ivf_probe_topk",
+    "repetition_stats",
+    "lang_quality",
+    "rand_indicators",
+    "problem_url",
+    "ann_lsh_topk",
+    "streaming_dedup",
+    "byte_identity_audit",
+    "dedup_exact",
+    "token_stats",
+    "simhash_near_pairs",
+    "simhash_pigeonhole_pairs",
+    "embedding_cosine_dups",
+    "embedding_cosine_dups_lsh",
+    "ann_cosine_topk",
+    "case_bucket",
+    "date_trunc_hourly",
+    "distinct_exact",
+    "doc_fingerprint",
+    "embedding_label_centroids",
+    "json_extract",
+    "langid_ngram",
+    "pivot_status",
+    "pricing_summary",
+    "rollup_hierarchy",
+    "sessionize",
 ]
 
 

@@ -37,8 +37,8 @@ def _normalize(m: np.ndarray) -> np.ndarray:
 
 
 def brute_force_topk(vectors: DataFrame, queries_pdf: pd.DataFrame, k: int,
-                     spark: SparkSession, id_col: str = "vec_id",
-                     emb_col: str = "embedding") -> DataFrame:
+                     spark: SparkSession, emb_col: str = "embedding"
+                     ) -> DataFrame:
     """Exact cosine top-k of every vector row against a broadcast query
     set. One numpy matmul per Arrow batch — the vectorized baseline."""
     qids = queries_pdf["query_id"].astype(str).to_numpy()

@@ -192,15 +192,6 @@ def k_ring(cell: int, k: int) -> np.ndarray:
     return ij_to_cell(packed // np.uint64(n), packed % np.uint64(n), res)
 
 
-def hollow_ring(cell: int, k: int) -> np.ndarray:
-    """Only the cells at exactly Chebyshev distance k (ring k shell)."""
-    if k == 0:
-        return np.array([cell], dtype=np.int64)
-    inner = set(k_ring(cell, k - 1).tolist())
-    outer = k_ring(cell, k)
-    return np.array([c for c in outer.tolist() if c not in inner], dtype=np.int64)
-
-
 def cover_polygon(rings: list[np.ndarray], res: int = DEFAULT_RES,
                   max_cells: int = 250_000):
     """Exact cell cover of a polygon-with-holes.

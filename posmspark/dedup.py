@@ -40,11 +40,10 @@ from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
 
-def shingles(df: DataFrame, text_col: str = "text", n: int = 3,
-             id_col: str = "doc_id") -> DataFrame:
-    """Distinct word n-gram shingles per document (JVM-side transform).
+def _word_ngrams(n: int):
+    """The word n-grams of the `_toks` token-array column, in order.
 
-    Tokenization happens ONCE into a column before the transform —
+    Tokenization happens ONCE into that column before the transform —
     split() written inline in the lambda is re-evaluated per element
     (O(tokens^2) per doc, measured 3.7x slower).
     """
@@ -52,14 +51,20 @@ def shingles(df: DataFrame, text_col: str = "text", n: int = 3,
     # (unlike DuckDB's empty generate_series), and slice(_toks, 0, n)
     # is a runtime error — a 2-token document would crash the job
     # (review-found, reproduced live).
-    grams = F.expr(
+    return F.expr(
         f"CASE WHEN size(_toks) < {n} THEN array()"
         f" ELSE transform(sequence(1, size(_toks) - {n - 1}),"
         f" i -> concat_ws(' ', slice(_toks, i, {n}))) END"
     )
+
+
+def shingles(df: DataFrame, text_col: str = "text", n: int = 3,
+             id_col: str = "doc_id") -> DataFrame:
+    """Distinct word n-gram shingles per document (JVM-side transform)."""
     return (
         df.select(id_col, F.split(F.col(text_col), " ").alias("_toks"))
-        .select(id_col, F.explode(F.array_distinct(grams)).alias("shingle"))
+        .select(id_col,
+                F.explode(F.array_distinct(_word_ngrams(n))).alias("shingle"))
     )
 
 
@@ -78,15 +83,10 @@ def shingle_hash_arrays(df: DataFrame, text_col: str = "text", n: int = 3,
     groupBy shuffle at all. Distinct runs on the STRING grams before
     hashing, so counts are hash-collision-proof exactly like the row
     form, and every downstream value is unchanged (oracle parity)."""
-    grams = F.expr(
-        f"CASE WHEN size(_toks) < {n} THEN array()"
-        f" ELSE transform(sequence(1, size(_toks) - {n - 1}),"
-        f" i -> concat_ws(' ', slice(_toks, i, {n}))) END"
-    )
     return (
         df.select(id_col, F.split(F.col(text_col), " ").alias("_toks"))
         .select(id_col,
-                F.transform(F.array_distinct(grams),
+                F.transform(F.array_distinct(_word_ngrams(n)),
                             lambda g: F.xxhash64(g)).alias("shs"))
     )
 

@@ -33,7 +33,6 @@ hundreds of thousands of independent groups.
 
 from __future__ import annotations
 
-import math
 from collections import defaultdict
 
 import numpy as np
@@ -263,8 +262,7 @@ def _interior_probe(ring: np.ndarray):
 
 
 def residual_classify(parent: list[list[np.ndarray]],
-                      children: dict[str, list[list[np.ndarray]]],
-                      res: int = 14):
+                      children: dict[str, list[list[np.ndarray]]]):
     """ST_Difference(parent, ST_Union(children)) classification
     (proc_functions.sql:104-197):
 
@@ -521,8 +519,8 @@ def _surviving_ring_chains(polys_traversal: list, chain_out: dict) -> set:
     """Chain keys reaching the OUTPUT under the ring reassembly drop
     rules: a ring keeps >= 4 rebuilt points (sum(len(chain)-1)+1), and
     a polygon whose OUTER ring degenerates drops entirely — the same
-    two rules the driver rebuild and the distributed `assemble` apply
-    to the actual arrays (keep the three in sync)."""
+    two rules shared_edge_simplify's rebuild applies to the actual
+    arrays (keep the two in sync)."""
     live: set = set()
     for poly in polys_traversal:
         ring_lens = [sum(len(chain_out[ck]) - 1 for ck in ring) + 1
@@ -1108,8 +1106,7 @@ def shared_edge_simplify(polys_by_id: dict[str, list[list[np.ndarray]]],
     # insert, so per-owner arrays can differ in final bits and a
     # near-tied DP decision could flip by owner / by which array
     # reached the cache first. key*SNAP is a pure function of ck —
-    # both owners, the distributed path, and the DuckDB oracle all DP
-    # the identical doubles (same rule dissolve_union's snapf already
+    # both owners and the DuckDB oracle DP the identical doubles (same rule dissolve_union's snapf already
     # applies).
     chain_grid: dict[tuple, np.ndarray] = {}
     chain_out: dict[tuple, np.ndarray] = {}
@@ -1178,14 +1175,6 @@ def ring_chain_pieces(ring: np.ndarray, seg_owners: dict
         a, b = _key(ring[k]), _key(ring[k + 1])
         sk = (a, b) if a < b else (b, a)
         osets.append(frozenset(seg_owners[sk]))
-    return _cut_chain_pieces(ring, osets)
-
-
-def _cut_chain_pieces(ring: np.ndarray, osets: list) -> list:
-    """Cut a closed ring into maximal runs of equal per-edge owner-set
-    markers (osets[k] marks edge ring[k]->ring[k+1]; any equality-
-    comparable marker works — frozensets driver-side, hashed oset ids in
-    the distributed path, which only ever compares them for equality)."""
     n = len(osets)
     start = 0
     changed = False
@@ -1220,7 +1209,7 @@ def _canonical_chain(path: np.ndarray) -> tuple[np.ndarray, bool]:
     """Direction-canonicalize a chain so BOTH owners of a border (one
     walks it forward, the other reversed) produce the identical array:
     open chains ordered by endpoint snap-keys, closed chains (enclave
-    borders, rotation-canonicalized in _cut_chain_pieces) by the second
+    borders, rotation-canonicalized in ring_chain_pieces) by the second
     vs second-to-last vertex. Returns (canonical_path, flipped)."""
     a, b = _key(path[0]), _key(path[-1])
     if a == b and len(path) > 2:
@@ -1283,277 +1272,53 @@ def dissolve_by_parent(spark, prepared, child_level: int):
     return src.groupBy("is_in").applyInPandas(run, schema=schema)
 
 
-#: SINGLE-SLOT per-executor-process cache of (vertex keys, split rings)
-#: for the current broadcast mesh — stage 1 and stage 3/5 tasks
-#: recompute nothing within one simplify_mesh_global run, and a new
-#: mesh EVICTS the old entry (an unbounded dict pinned every past mesh
-#: forever — review r03). The entry keeps a reference to the mesh
-#: object so the id()-key can't be recycled while cached.
-_SPLIT_CACHE: dict[int, dict] = {}
-
-
-def _split_feature(bc, oid: str):
-    """Mesh-vertex-split rings of one feature, from the broadcast mesh,
-    computed lazily once per executor process."""
-    mesh = bc.value
-    state = _SPLIT_CACHE.get(id(mesh))
-    if state is None:
-        vkeys: set = set()
-        for polys in mesh.values():
-            for rings in polys:
-                for ring in rings:
-                    for p in ring[:-1]:
-                        vkeys.add(_key(p))
-        state = {"mesh": mesh, "vkeys": vkeys, "split": {}}
-        _SPLIT_CACHE.clear()
-        _SPLIT_CACHE[id(mesh)] = state
-    if oid not in state["split"]:
-        state["split"][oid] = [
-            [
-                _split_ring_at_vertices(
-                    np.asarray(r, dtype=np.float64), state["vkeys"])
-                for r in rings
-            ]
-            for rings in mesh[oid]
-        ]
-    return state["split"][oid]
-
-
 def simplify_mesh_global(spark, prepared, child_level: int,
                          tol: float = 0.05):
-    """G13 distributed + CROSS-PARENT watertight (VERDICT r02 item 4).
+    """G13 cross-parent watertight simplify of one admin level.
 
-    Two-phase chain extraction over the WHOLE child mesh, so borders
-    between children of DIFFERENT parents are simplified once globally
-    (simplifying each parent's children on their own would see only
-    that group's junction decomposition and can diverge on
-    cross-parent borders — the same limitation as the reference's
-    per-country topology build, proc_functions.sql:27-82, closed here):
+    shared_edge_simplify runs once on the driver over the WHOLE
+    level-`child_level` mesh, so borders between children of DIFFERENT
+    parents are simplified once globally (simplifying each parent's
+    children on their own would see only that group's junction
+    decomposition and can diverge on cross-parent borders — the same
+    limitation as the reference's per-country topology build,
+    proc_functions.sql:27-82, closed here).
 
-      1. per-feature tasks emit conformal edge rows (seg_key + ring
-         position) from the broadcast dimension mesh
-      2. ONE groupBy(seg_key) computes global owner-set ids — the
-         equi-shuffle that makes cross-parent borders consistent
-      3. per-feature tasks cut each ring into constant-owner-set
-         chains (_cut_chain_pieces), emitting direction-canonical
-         pieces keyed by an injective md5 of the chain's snapped points
-      4. groupBy(chain_key) simplifies every border chain ONCE
-         (Douglas-Peucker, endpoints pinned, Arrow-batched)
-      5. per-feature tasks reassemble rings by substituting simplified
-         chains back in piece order
-
-    Equivalent by construction — and pinned by test — to the driver-
-    side shared_edge_simplify over the union mesh. Parallelism axes:
-    features (stages 1/3/5) and chains (stage 4); every shuffle is an
-    equi-key exchange on seg_key / chain_key / osm_id.
+    It runs on the driver because a distributed form would not scale
+    past it either:
+      - the mesh is `prepared.polys_by_id`, which already lives on the
+        driver (a broadcast would ship all of it to every executor)
+      - the topology repair (_repair_chain_crossings) needs every
+        chain's grid and simplified points and every ring's chain
+        order in one place
+      - the only per-chain work an executor could take, Douglas-Peucker,
+        costs milliseconds on an admin level; Spark stages around it
+        cost seconds
+    Building the result frame runs no Spark job.
 
     Output: (osm_id, parent_osm_id, n_points_before, n_points_after,
     geom_wkb), one row per simplified child.
     """
-    import hashlib
-
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-    from pyspark.sql.functions import pandas_udf
-
     lp = prepared.levels_pdf
     kids = lp[lp.adminlevel == child_level][["osm_id", "is_in"]]
-    mesh_ids = sorted(oid for oid in kids.osm_id
-                      if oid in prepared.polys_by_id)
-    if not mesh_ids:
-        # degenerate input (no features at child_level): empty typed
-        # result, not a createDataFrame schema-inference crash on the
-        # empty pandas frames below (same class as the prepare_boundaries
-        # ADVICE r02 fix; review r03)
-        return spark.createDataFrame([], schema=(
-            "osm_id string, parent_osm_id string, n_points_before long,"
-            " n_points_after long, geom_wkb binary"))
-    mesh = {oid: prepared.polys_by_id[oid] for oid in mesh_ids}
-    bc = spark.sparkContext.broadcast(mesh)
-    src = spark.createDataFrame(pd.DataFrame({"osm_id": mesh_ids}))
-
-    edge_schema = T.StructType([
-        T.StructField("osm_id", T.StringType()),
-        T.StructField("poly_idx", T.IntegerType()),
-        T.StructField("ring_idx", T.IntegerType()),
-        T.StructField("edge_idx", T.IntegerType()),
-        T.StructField("seg_key", T.BinaryType()),
-    ])
-
-    def emit_edges(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        oid = key[0]
-        rows = []
-        for pi, rings in enumerate(_split_feature(bc, oid)):
-            for ri, ring in enumerate(rings):
-                for ei in range(len(ring) - 1):
-                    a, b = _key(ring[ei]), _key(ring[ei + 1])
-                    sk = (a, b) if a < b else (b, a)
-                    rows.append((
-                        oid, pi, ri, ei,
-                        np.array(sk, dtype="<i8").tobytes(),
-                    ))
-        return pd.DataFrame(
-            rows, columns=["osm_id", "poly_idx", "ring_idx", "edge_idx",
-                           "seg_key"])
-
-    edges = src.groupBy("osm_id").applyInPandas(emit_edges, edge_schema)
-
-    # stage 2: global owner-set id per segment (order-canonical md5 of
-    # the sorted owner list — only ever compared for equality). Each
-    # owner is length-prefixed so the join is INJECTIVE: a bare '|'
-    # join would merge e.g. {'A','B','C'} with {'A','B|C'} when ids
-    # contain the delimiter, diverging from the driver's frozensets
-    owners = (
-        edges.select("seg_key", "osm_id").distinct()
-        .groupBy("seg_key")
-        .agg(F.md5(F.concat_ws("|", F.sort_array(F.collect_set(
-            F.concat_ws(":", F.length("osm_id").cast("string"),
-                        F.col("osm_id"))))))
-            .alias("oset_id"))
-    )
-
-    piece_schema = T.StructType([
-        T.StructField("chain_key", T.StringType()),
-        T.StructField("flip", T.BooleanType()),
-        T.StructField("osm_id", T.StringType()),
-        T.StructField("poly_idx", T.IntegerType()),
-        T.StructField("ring_idx", T.IntegerType()),
-        T.StructField("piece_idx", T.IntegerType()),
-        T.StructField("pts", T.BinaryType()),
-    ])
-
-    def cut_chains(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        oid = key[0]
-        split = _split_feature(bc, oid)
-        rows = []
-        for (pi, ri), grp in pdf.groupby(["poly_idx", "ring_idx"],
-                                         sort=True):
-            ring = split[pi][ri]
-            grp = grp.sort_values("edge_idx")
-            osets = grp["oset_id"].tolist()
-            for piece_idx, (_oset, path) in enumerate(
-                    _cut_chain_pieces(ring, osets)):
-                canon, flip = _canonical_chain(path)
-                keys = np.array([_key(q) for q in canon], dtype="<i8")
-                ck = hashlib.md5(keys.tobytes()).hexdigest()
-                # pts = GRID reconstruction of the keys (r05), a pure
-                # function of ck: every duplicate piece carries
-                # byte-identical pts, min() below is a true dedupe, and
-                # the driver-side simplify_chain DPs the same doubles
-                rows.append((
-                    ck, bool(flip), oid, int(pi), int(ri), piece_idx,
-                    np.ascontiguousarray(
-                        keys.astype(np.float64) * SNAP,
-                        dtype="<f8").tobytes(),
-                ))
-        return pd.DataFrame(
-            rows, columns=["chain_key", "flip", "osm_id", "poly_idx",
-                           "ring_idx", "piece_idx", "pts"])
-
-    from posmspark import session as _session
-
-    pieces = _session.stage_persist(
-        # feeds the chain dedupe AND the reassembly join
-        edges.join(owners, "seg_key")
-        .groupBy("osm_id").applyInPandas(cut_chains, piece_schema)
-    )
-
-    @pandas_udf(T.BinaryType())
-    def dp_chain(pts: pd.Series) -> pd.Series:
-        out = []
-        for b in pts:
-            arr = np.frombuffer(b, dtype="<f8").reshape(-1, 2)
-            out.append(np.ascontiguousarray(
-                geom.douglas_peucker(arr, tol), dtype="<f8").tobytes())
-        return pd.Series(out)
-
-    # stage 4: one DP per distinct chain (all duplicates carry the
-    # identical canonical bytes, so min() is a pure dedupe)
-    dp_rows = (
-        pieces.groupBy("chain_key").agg(F.min("pts").alias("pts"))
-        .select("chain_key", "pts", dp_chain("pts").alias("spts"))
-        .collect()
-    )
-    # stage 4.5: topology repair — THE SAME _repair_chain_crossings the
-    # driver-side shared_edge_simplify runs, so the two paths stay
-    # equivalent by construction on crossing meshes too. Driver-side is
-    # architecturally consistent here: the whole mesh is already a
-    # driver-held broadcast dimension (prepared.polys_by_id); the
-    # distributed stages exist to parallelize DP compute, not to hold
-    # data the driver can't.
-    chain_grid = {r["chain_key"]: np.frombuffer(
-        r["pts"], dtype="<f8").reshape(-1, 2) for r in dp_rows}
-    chain_out = {r["chain_key"]: np.frombuffer(
-        r["spts"], dtype="<f8").reshape(-1, 2) for r in dp_rows}
-    ring_map: dict[tuple, list] = {}
-    for r in pieces.select("osm_id", "poly_idx", "ring_idx", "piece_idx",
-                           "chain_key").collect():
-        ring_map.setdefault((r["osm_id"], r["poly_idx"]), {}).setdefault(
-            r["ring_idx"], []).append((r["piece_idx"], r["chain_key"]))
-    polys_traversal = [
-        [[ck for _pi, ck in sorted(rings[ri])] for ri in sorted(rings)]
-        for rings in ring_map.values()]
-    _repair_chain_crossings(chain_grid, chain_out, polys_traversal)
-    # explicit schema: an all-empty-polys mesh yields zero chains, and
-    # untyped createDataFrame on an empty frame raises schema-inference
-    # errors (same class as the mesh_ids guard above, review r03)
-    chains = spark.createDataFrame(
-        pd.DataFrame({
-            "chain_key": list(chain_out),
-            "spts": [np.ascontiguousarray(v, dtype="<f8").tobytes()
-                     for v in chain_out.values()],
-        }), schema="chain_key string, spts binary")
-
-    out_schema = T.StructType([
-        T.StructField("osm_id", T.StringType()),
-        T.StructField("n_points_before", T.LongType()),
-        T.StructField("n_points_after", T.LongType()),
-        T.StructField("geom_wkb", T.BinaryType()),
-    ])
-
-    def assemble(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        oid = key[0]
-        new_polys: dict[int, dict[int, np.ndarray]] = {}
-        for (pi, ri), grp in pdf.groupby(["poly_idx", "ring_idx"],
-                                         sort=True):
-            grp = grp.sort_values("piece_idx")
-            rebuilt: list = []
-            for r in grp.itertuples(index=False):
-                arr = np.frombuffer(r.spts, dtype="<f8").reshape(-1, 2)
-                if r.flip:
-                    arr = arr[::-1]
-                rebuilt.extend(arr[:-1])
-            rebuilt.append(rebuilt[0])
-            arr = np.array(rebuilt)
-            if len(arr) >= 4:
-                new_polys.setdefault(int(pi), {})[int(ri)] = arr
-        # a polygon whose OUTER ring (ri=0) degenerated below 4 points
-        # must drop entirely: re-packing its surviving holes would
-        # promote a hole into shell position — inverted geometry
-        # (ADVICE r03)
-        polys = [
-            [rings[ri] for ri in sorted(rings)]
-            for _pi, rings in sorted(new_polys.items())
-            if 0 in rings
-        ]
-        before = sum(len(r) for rings in bc.value[oid] for r in rings)
-        after = sum(len(r) for rings in polys for r in rings)
-        return pd.DataFrame([{
-            "osm_id": oid,
-            "n_points_before": before,
-            "n_points_after": after,
-            "geom_wkb": geom.multipolygon_to_wkb(polys),
-        }])
-
-    assembled = (
-        pieces.join(chains, "chain_key")
-        .groupBy("osm_id").applyInPandas(assemble, out_schema)
-    )
-    parents = spark.createDataFrame(
-        kids.rename(columns={"is_in": "parent_osm_id"}))
-    return assembled.join(F.broadcast(parents), "osm_id").select(
-        "osm_id", "parent_osm_id", "n_points_before", "n_points_after",
-        "geom_wkb")
+    kids = kids[kids.osm_id.isin(list(prepared.polys_by_id))] \
+        .sort_values("osm_id", kind="stable")
+    simplified = shared_edge_simplify(
+        {oid: prepared.polys_by_id[oid] for oid in kids.osm_id}, tol=tol)
+    rows = []
+    for oid, parent in kids.itertuples(index=False):
+        polys = simplified[oid]
+        rows.append((
+            oid, parent,
+            sum(len(r) for rings in prepared.polys_by_id[oid] for r in rings),
+            sum(len(r) for rings in polys for r in rings),
+            geom.multipolygon_to_wkb(polys),
+        ))
+    # explicit schema: an empty child level must come back as an empty
+    # typed frame, not a schema-inference error
+    return spark.createDataFrame(rows, schema=(
+        "osm_id string, parent_osm_id string, n_points_before long,"
+        " n_points_after long, geom_wkb binary"))
 
 
 def residual_by_parent(spark, prepared, parent_level: int, child_level: int):
@@ -2276,10 +2041,9 @@ def simplify_mesh_stats_oracle_sql(child_level: int = 2,
 
     Chain coordinates on both sides are the GRID reconstruction of the
     snap keys (key*SNAP, r05): a pure function of the chain key, so the
-    engine's two owners, its driver and distributed paths, and this
-    oracle all run DP on bit-identical doubles even at off-grid
-    T-junctions (where one owner holds the junction raw and the other
-    as an inserted split).
+    engine's two owners and this oracle all run DP on bit-identical
+    doubles even at off-grid T-junctions (where one owner holds the
+    junction raw and the other as an inserted split).
 
     Scope: this oracle mirrors pure per-chain DP. The engine's
     topology repair (_repair_chain_crossings) reverts crossing chains

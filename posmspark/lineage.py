@@ -201,18 +201,6 @@ def _fingerprint_aggs():
     ]
 
 
-def fingerprint_df(df: DataFrame, sample_cols: list[str] | None = None) -> str:
-    """Cheap content fingerprint: count + xor + decimal-sum of row
-    hashes; one map-side-combinable aggregation, order-insensitive."""
-    cols = sample_cols or df.columns
-    h = (
-        df.select(F.xxhash64(*[F.col(c) for c in cols]).alias("h"))
-        .agg(*_fingerprint_aggs())
-        .collect()[0]
-    )
-    return f"{h['n']}:{h['x']}:{h['s']}"
-
-
 def fingerprint_partitions(
     df: DataFrame, partition_col: str,
     sample_cols: list[str] | None = None,

@@ -103,7 +103,7 @@ def _grid_features(img: np.ndarray, dim: int = FEATURE_DIM) -> np.ndarray:
     return out
 
 
-def extract_features(media: DataFrame, batch_rows: int = 64) -> DataFrame:
+def extract_features(media: DataFrame) -> DataFrame:
     """mapInPandas decode + feature extraction with per-row fault
     isolation (the reference's per-feature try/except-and-continue,
     proc_functions.sql:48-52, as decode_ok/decode_err columns)."""
@@ -140,7 +140,7 @@ RESIZE_SCHEMA = ("media_id string, kind string, payload binary,"
 
 
 def resize_images(media: DataFrame, target_w: int = 16,
-                  target_h: int = 16, batch_rows: int = 64) -> DataFrame:
+                  target_h: int = 16) -> DataFrame:
     """Image resize as mapInPandas: decode -> deterministic nearest-
     neighbor downsample in numpy -> re-encode, with the same per-row
     fault routing as extract_features (resize_ok=False rows, never a

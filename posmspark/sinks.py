@@ -20,7 +20,6 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from posmspark import geom
@@ -286,19 +285,6 @@ def read_geojson_features(spark: SparkSession, df: DataFrame) -> "pd.DataFrame":
 def write_partitioned(df: DataFrame, path: str, *cols: str) -> None:
     """S8/O10 level fan-out as ONE partitioned write (no 10 passes)."""
     df.write.mode("overwrite").partitionBy(*cols).parquet(path)
-
-
-def write_bucketed(df: DataFrame, table: str, bucket_col: str,
-                   n_buckets: int = 32, sort_col: str | None = None) -> None:
-    """Bucketed managed table (CLUSTERED BY) — the co-located-join
-    layout for keys joined repeatedly at scale (SURVEY.md §4: bucketing
-    for co-located joins). Two tables bucketed on the same key join
-    WITHOUT a shuffle (verified by plan test)."""
-    w = df.write.mode("overwrite").format("parquet").bucketBy(
-        n_buckets, bucket_col)
-    if sort_col:
-        w = w.sortBy(sort_col)
-    w.saveAsTable(table)
 
 
 POLY_ORACLE_BODY = r"""

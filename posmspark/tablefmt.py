@@ -249,21 +249,6 @@ def rollback(table_dir: str, snapshot_id: int) -> None:
     os.replace(tmp, _version_path(table_dir))
 
 
-def lineage_df(spark: SparkSession, table_dir: str,
-               snapshot_id: int | None = None) -> DataFrame:
-    """Per-file lineage of a snapshot as a DataFrame: (path, partition
-    json, rows) — the row-count metrics the north rule requires."""
-    sid = snapshot_id if snapshot_id is not None else current_snapshot_id(
-        table_dir)
-    meta = read_snapshot_meta(table_dir, sid)
-    rows = [
-        (f["path"], json.dumps(f["partition"], sort_keys=True), f["rows"])
-        for f in meta["files"]
-    ]
-    return spark.createDataFrame(
-        rows, "path string, partition string, rows long")
-
-
 def table_snapshots_oracle_sql() -> str:
     """The table_snapshots registry query under the oracle gate
     (promotes the r04 rows-only entry): DuckDB re-derives each

@@ -10,10 +10,10 @@ fan-out of generate_geojson.py:144-377) as distributed aggregations:
 - tile assignment: cell stats joined back to covering polygons
 
 Skew: dense urban cells concentrate documents (the mandated hot-cell
-fixture). Exact distinct-url counts are computed with a SALTED two-phase
-aggregation — partial distinct per (cell, salt) shard first, so no
-single reducer owns a hot cell — plus AQE skew splitting for the final
-exchange. Plain counts use Spark's built-in map-side partial agg.
+fixture). Exact distinct-url counts are computed in two phases — a
+(cell, url) dedup first, whose shuffle key spreads a hot cell over many
+reducers — plus AQE skew splitting for the final exchange. Plain counts
+use Spark's built-in map-side partial agg.
 """
 
 from __future__ import annotations
@@ -22,9 +22,6 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-DEFAULT_SALT = 16
-
 
 def cell_tile_stats(assigned: DataFrame) -> DataFrame:
     """Per-cell doc_count + exact distinct_urls, skew-safe.
@@ -67,25 +64,6 @@ def admin_rollup(assigned: DataFrame) -> DataFrame:
             F.countDistinct("url").alias("distinct_urls"),
         )
     )
-
-
-def salted_exact_distinct(df: DataFrame, group_col: str, distinct_col: str,
-                          salt: int = DEFAULT_SALT) -> DataFrame:
-    """Generic salted exact count-distinct: explicit 2-stage plan for
-    when the group key alone would put a hot key on one reducer.
-
-    Stage 1 shuffles on (group, salt(hash(distinct_col)))  -> partial sets
-    Stage 2 shuffles tiny partials on group                -> exact union
-    """
-    salted = df.withColumn(
-        "_salt", F.pmod(F.xxhash64(F.col(distinct_col)), F.lit(salt))
-    )
-    partial = salted.groupBy(group_col, "_salt").agg(
-        F.count_distinct(F.col(distinct_col)).alias("_pc")
-    )
-    # distinct values land in exactly one salt shard (hash-determined),
-    # so summing partial distinct counts is exact
-    return partial.groupBy(group_col).agg(F.sum("_pc").alias("distinct_count"))
 
 
 def boundary_tile_areas(spark, prepared) -> DataFrame:

@@ -172,8 +172,7 @@ def topology_tree_by_parent(spark, prepared, out_dir: str | None = None,
             rows.append((parent, parent, True))
             rows.extend((parent, m, False) for m in members)
     # explicit schema: an all-object empty pandas frame (zero groups)
-    # fails inference — same class of bug as the simplify_mesh_global
-    # empty-input fix (ADVICE r03)
+    # fails inference (ADVICE r03)
     src = spark.createDataFrame(
         pd.DataFrame(rows, columns=["parent_osm_id", "osm_id",
                                     "is_boundary"]),

@@ -1,5 +1,6 @@
 import os
 import sys
+import uuid
 
 import pytest
 
@@ -12,3 +13,21 @@ def spark():
 
     s = get_spark("posmspark-tests", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "8")))
     yield s
+
+
+@pytest.fixture
+def count_jobs(spark):
+    """count_jobs(fn) -> (fn(), number of Spark jobs fn ran)."""
+    sc = spark.sparkContext
+
+    def run(fn):
+        group = f"count-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run

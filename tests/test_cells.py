@@ -49,7 +49,6 @@ def test_k_ring_counts_and_wrap():
     assert len(cells.k_ring(c, 0)) == 1
     assert len(cells.k_ring(c, 1)) == 9
     assert len(cells.k_ring(c, 2)) == 25
-    assert len(cells.hollow_ring(c, 2)) == 16
     # wrap at the antimeridian: full ring still 9 distinct cells
     cm = int(cells.encode(np.array([179.99]), np.array([0.0]), res=6)[0])
     ring = cells.k_ring(cm, 1)

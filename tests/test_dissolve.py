@@ -267,7 +267,8 @@ def test_simplify_dropped_shell_drops_whole_polygon(spark):
         for poly in out[oid]:
             assert len(poly) >= 1 and len(poly[0]) >= 4
 
-    # distributed path must agree: A's row carries zero surviving points
+    # simplify_mesh_global must agree: A's row carries zero surviving
+    # points
     kids = pd.DataFrame({
         "osm_id": list(polys), "is_in": "P",
         "adminlevel": 2,
@@ -328,11 +329,11 @@ def test_residual_annular_island():
 
 
 def test_simplify_mesh_global_equals_driver_union_mesh(spark):
-    """Round-3 distributed+global simplify (VERDICT r02 item 4): the
-    chain-extraction pipeline must reproduce the driver-side
-    shared_edge_simplify over the UNION mesh of ALL parents' children
-    array-for-array — which makes it cross-parent watertight by the
-    same argument."""
+    """Global simplify (VERDICT r02 item 4): simplify_mesh_global's rows
+    must carry shared_edge_simplify over the UNION mesh of ALL parents'
+    children array-for-array through the WKB round trip, one row per
+    child with its parent — which makes it cross-parent watertight by
+    the same argument."""
     from posmspark.dissolve import simplify_mesh_global
     from posmspark.joins import prepare_boundaries
 
@@ -1224,9 +1225,9 @@ def test_simplify_repair_reverts_crossing_chains():
 
 
 def test_simplify_mesh_global_repair_matches_driver(spark):
-    """The distributed path must apply the IDENTICAL repair: on the
-    crossing-triggering mesh, simplify_mesh_global's output equals the
-    driver-side shared_edge_simplify array-for-array."""
+    """simplify_mesh_global must carry the repaired chains: on the
+    crossing-triggering mesh, its output equals shared_edge_simplify
+    array-for-array."""
     import types
 
     import pandas as pd
@@ -1309,9 +1310,8 @@ def test_simplify_repair_collinear_landing():
 
 def test_simplify_mesh_global_all_empty_polys(spark):
     """Review r05: features present at child_level but with EMPTY
-    polys lists pass the mesh_ids guard yet yield zero chains; the
-    repaired chains frame must use an explicit schema so the empty
-    createDataFrame doesn't raise a schema-inference error."""
+    polys lists yield zero chains; each still gets its row, with no
+    points and an empty MultiPolygon."""
     import types
 
     import pandas as pd
@@ -1326,8 +1326,27 @@ def test_simplify_mesh_global_all_empty_polys(spark):
     prepared = types.SimpleNamespace(levels_pdf=lp,
                                      polys_by_id={"X": [], "Y": []})
     rows = simplify_mesh_global(spark, prepared, child_level=2,
-                                tol=0.5).collect()
-    assert rows == [] or all(r["n_points_after"] == 0 for r in rows)
+                                tol=0.5).orderBy("osm_id").collect()
+    assert [(r["osm_id"], r["parent_osm_id"], r["n_points_before"],
+             r["n_points_after"]) for r in rows] == [
+        ("X", "P", 0, 0), ("Y", "P", 0, 0)]
+    assert all(geom.wkb_to_multipolygon(bytes(r["geom_wkb"])) == []
+               for r in rows)
+
+
+def test_simplify_mesh_global_runs_no_job(spark, count_jobs):
+    """The mesh is driver-held and shared_edge_simplify runs on the
+    driver, so building the result frame runs no Spark job; consuming
+    it returns one row per child."""
+    from posmspark.dissolve import simplify_mesh_global
+    from posmspark.joins import prepare_boundaries
+
+    prepared = prepare_boundaries(
+        synth.gen_boundaries_pdf(), synth.gen_admin_mapping_pdf())
+    out, n_jobs = count_jobs(lambda: simplify_mesh_global(
+        spark, prepared, child_level=2, tol=0.05))
+    assert n_jobs == 0
+    assert out.count() == len(prepared.levels_pdf.query("adminlevel == 2"))
 
 
 def test_simplify_repair_ignores_input_inherent_overlap():

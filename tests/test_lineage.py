@@ -4,7 +4,6 @@ stage manifests; kill-and-resume semantics; north-rule lineage rows)."""
 import json
 import os
 import re
-import uuid
 
 import pytest
 from pyspark.sql import functions as F
@@ -40,20 +39,7 @@ def test_stage_writes_manifest_and_resumes(spark, tmp_path):
     assert df3.count() == 100 and calls["n"] == 2
 
 
-def _count_jobs(spark, fn):
-    """(result of fn(), number of Spark jobs fn ran)."""
-    sc = spark.sparkContext
-    group = f"count-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
-def test_stage_runs_one_job_and_resume_none(spark, tmp_path):
+def test_stage_runs_one_job_and_resume_none(spark, tmp_path, count_jobs):
     """A checkpointed stage runs only its write job: lineage and null
     counts come from the footers just written. Resuming reads the
     schema from the checkpoint's footer, so it runs no job."""
@@ -62,10 +48,10 @@ def test_stage_runs_one_job_and_resume_none(spark, tmp_path):
     def build():
         return spark.range(0, 1000, 1, 7).withColumn("v", F.col("id") * 2)
 
-    _, n_write = _count_jobs(
-        spark, lambda: lineage.run_stage(spark, "j", "fp", out_dir, build))
-    out, n_resume = _count_jobs(
-        spark, lambda: lineage.run_stage(spark, "j", "fp", out_dir, build))
+    _, n_write = count_jobs(
+        lambda: lineage.run_stage(spark, "j", "fp", out_dir, build))
+    out, n_resume = count_jobs(
+        lambda: lineage.run_stage(spark, "j", "fp", out_dir, build))
     assert (n_write, n_resume) == (1, 0)
     assert lineage.read_manifest(out_dir)["n_partitions"] == 7
     assert out.count() == 1000
@@ -179,12 +165,20 @@ def test_pipeline_checkpoint_resume_identical(spark, tmp_path):
         assert os.path.getmtime(os.path.join(wd, st, lineage.MANIFEST)) == mt
 
 
+def _fingerprint(df) -> str:
+    """The whole frame's fingerprint: fingerprint_partitions over one
+    constant partition key."""
+    fps = lineage.fingerprint_partitions(df.withColumn("_p", F.lit(0)), "_p")
+    assert list(fps) == ["0"]
+    return fps["0"]
+
+
 def test_fingerprint_df_order_insensitive(spark):
     df = spark.range(100).withColumn("v", F.col("id") * 3)
-    a = lineage.fingerprint_df(df)
-    b = lineage.fingerprint_df(df.repartition(7))
+    a = _fingerprint(df)
+    b = _fingerprint(df.repartition(7))
     assert a == b
-    c = lineage.fingerprint_df(df.withColumn("v", F.col("id") * 4))
+    c = _fingerprint(df.withColumn("v", F.col("id") * 4))
     assert a != c
 
 
@@ -193,7 +187,7 @@ def test_fingerprint_no_pair_cancellation(spark):
     of row A for two copies of row B must change the fingerprint."""
     a = spark.createDataFrame([(1,), (1,), (3,)], "v int")
     b = spark.createDataFrame([(2,), (2,), (3,)], "v int")
-    assert lineage.fingerprint_df(a) != lineage.fingerprint_df(b)
+    assert _fingerprint(a) != _fingerprint(b)
 
 
 def _mk_input(spark, n_keys=16, rows_per_key=20, mutate_key=None):

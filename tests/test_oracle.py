@@ -397,9 +397,9 @@ def test_simplify_offgrid_tjunction_canonical_chains(spark):
     """r05 chain canonicalization: a T-junction at an OFF-GRID
     coordinate (raw != key*SNAP) means one owner holds the junction as
     a raw ring vertex while its neighbor receives it as a key*SNAP
-    insert. All four derivations must agree bit-for-bit: the driver
-    simplifier, the distributed simplifier, both owners' shared-border
-    polylines, and the DuckDB oracle."""
+    insert. All four derivations must agree bit-for-bit:
+    shared_edge_simplify, the simplify_mesh_global rows built from it,
+    both owners' shared-border polylines, and the DuckDB oracle."""
     import duckdb as _duckdb
     import numpy as np
     import pandas as pd
@@ -435,7 +435,7 @@ def test_simplify_offgrid_tjunction_canonical_chains(spark):
     for oid in mesh:
         for dp_, ep in zip(dist[oid], drv[oid], strict=True):
             for dr, er in zip(dp_, ep, strict=True):
-                assert np.array_equal(dr, er), oid  # driver == distributed
+                assert np.array_equal(dr, er), oid  # rows == driver
     # the junction lands at its GRID coordinates in every owner
     for oid in ("K1", "K2", "K3"):
         pts = {(p[0], p[1]) for p in drv[oid][0][0]}
@@ -774,9 +774,8 @@ def test_topo_arc_stats_oracle_rep_order_quant_straddle():
 def test_owner_set_encoding_injective():
     """Owner-set fingerprints must be injective for pipe-bearing ids:
     {'A','B','C'} and {'A','B|C'} joined bare with '|' collide, which
-    would merge distinct chain runs in BOTH the distributed engine's
-    oset_id and the SQL oracle's oset. The length-prefixed encoding
-    keeps them distinct."""
+    would merge distinct chain runs in the SQL oracle's oset. The
+    length-prefixed encoding keeps them distinct."""
     import duckdb as _duckdb
 
     sql = ("SELECT string_agg(DISTINCT CAST(length(oid) AS VARCHAR)"
@@ -790,8 +789,9 @@ def test_owner_set_encoding_injective():
 
 
 def test_owner_set_spark_oset_id_injective(spark):
-    """Spark twin of the injectivity pin: simplify's stage-2 oset_id
-    md5 must distinguish the colliding owner sets."""
+    """Spark twin of the injectivity pin: the same length-prefixed
+    owner-set encoding, built from Spark functions, must distinguish
+    the colliding owner sets."""
     from pyspark.sql import functions as F
 
     df = spark.createDataFrame(

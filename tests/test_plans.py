@@ -1,8 +1,7 @@
 """Physical-plan shape tests — the scale properties the engine promises
 (SURVEY.md §4): predicate pushdown reaches the parquet scan, dimension
-joins broadcast, the PIP assignment is shuffle-free, aggregations use
-map-side partial aggregation, and salted exact-distinct matches plain
-count-distinct."""
+joins broadcast, the PIP assignment is shuffle-free, and aggregations
+use map-side partial aggregation."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -65,50 +64,6 @@ def test_partial_aggregation_map_side(spark):
     agg = li.groupBy("l_returnflag").agg(F.sum("l_quantity").alias("s"))
     plan = _plan(agg)
     assert "partial_sum" in plan
-
-
-def test_salted_exact_distinct_matches_plain(spark):
-    pages = synth.pages_df(spark, 5000)
-    from posmspark import textx
-    from posmspark.joins import pip_join
-    from posmspark.pipeline import default_prepared
-
-    ok = textx.with_ingest(pages).filter(
-        F.col("text_ok") & F.col("lat").isNotNull()
-    ).select("url", "lon", "lat", "cell")
-    assigned = pip_join(ok, default_prepared(), spark, keep_unmatched=False)
-    salted = tiles.salted_exact_distinct(
-        assigned, "osm_id_l0", "url").collect()
-    plain = assigned.groupBy("osm_id_l0").agg(
-        F.countDistinct("url").alias("distinct_count")).collect()
-    assert sorted(map(tuple, salted)) == sorted(map(tuple, plain))
-
-
-def test_bucketed_join_has_no_shuffle(spark, tmp_path):
-    """Tables bucketed on the join key sort-merge-join with ZERO
-    Exchange — the layout for repeatedly-joined 100 TB fact tables."""
-    from posmspark import sinks
-
-    # warehouse.dir is a static conf; the default spark-warehouse/ under
-    # the session's working dir is fine for a managed-table round trip
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        orders = spark.read.parquet(f"{SF}/orders.parquet")
-        lineitem = spark.read.parquet(f"{SF}/lineitem.parquet")
-        sinks.write_bucketed(orders, "orders_b", "o_orderkey", 8)
-        sinks.write_bucketed(
-            lineitem.withColumnRenamed("l_orderkey", "o_orderkey"),
-            "lineitem_b", "o_orderkey", 8)
-        j = spark.table("orders_b").join(spark.table("lineitem_b"),
-                                         "o_orderkey")
-        plan = _plan(j)
-        assert "Exchange" not in plan, plan
-        assert j.count() == lineitem.count()
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold",
-                       str(64 * 1024 * 1024))
-        spark.sql("DROP TABLE IF EXISTS orders_b")
-        spark.sql("DROP TABLE IF EXISTS lineitem_b")
 
 
 def test_dedup_queries_never_cartesian(spark):

@@ -118,14 +118,6 @@ def test_commit_after_rollback_preserves_history(spark, tmp_path):
     assert [s["snapshot_id"] for s in tablefmt.snapshots(t)] == [1, 2, 3]
 
 
-def test_lineage_df_row_counts(spark, tmp_path):
-    t = str(tmp_path / "tbl4")
-    tablefmt.commit_overwrite(_df(spark, 0, 80), t, partition_by=["country"])
-    lin = tablefmt.lineage_df(spark, t).collect()
-    assert sum(r["rows"] for r in lin) == 80
-    assert all(r["partition"].startswith('{"country"') for r in lin)
-
-
 def test_concurrent_committer_cannot_clobber_winner(spark, tmp_path):
     """ADVICE r02 (medium): two same-parent committers used to compute
     the same seq and stage data into the SAME data/s<seq> dir — the
