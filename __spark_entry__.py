@@ -638,70 +638,20 @@ _SPATIAL_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
 
 #: Driver-budget ordering (VERDICT r02 item 1): the driver verifies
 #: registry entries IN ORDER with a ~50-query budget. Rotation: the
-#: entries whose data come through prepare_boundaries or pip_join, now
-#: resolved by one shared first-match kernel, come FIRST, led by those
-#: whose oracle is independent of the boundary build (result-identical
-#: by construction, but the driver should re-prove that, not trust it);
-#: then the entries the previous order left past the budget; then the
-#: rows-only residue; the entries the previous order put first
-#: (re-proved then, unchanged since) fill the tail.
+#: entries whose plans changed come FIRST (the PIP join now runs as a
+#: broadcast hash join + one Project inside the JVM, and the n-gram
+#: Jaccard pairs gained a size-ratio prefilter); then the entries the
+#: previous order left past the budget; then the rows-only residue; the
+#: rest keep their previous relative order in the tail.
 _VERIFY_FIRST = [
-    # --- code changed: one shared-edge simplifier, its chain cutter, the
-    # residual classifier, the multimodal decoder and the n-gram helper
-    "simplify_mesh_stats",
-    "dual_export",
-    "residual_holes",
-    "topojson_arc_stats",
-    "multimodal_features",
-    "minhash_band_candidates",
-    "minhash_verified_dups",
-    "ngram_jaccard_pairs",
-    # --- past the budget in the previous order
-    "set_difference",
-    "snap_to_grid",
-    "string_funcs",
-    "topk",
-    "union_bag",
-    "window_running",
-    "scan_filter_project",
-    "coalesce_upper",
-    "id_prefix",
-    "boundary_predicate",
-    "filler_filter",
-    "anti_join",
-    "semi_join",
-    "unusable_anti_join",
-    "hierarchy_join",
-    "mapping_override",
-    "incremental_manifest",
-    "table_snapshots",
-    # --- rows-only residue: keep their rows fresh every round (their
-    # oracle-backed siblings cover the checkable semantics)
-    "topojson_export",
-    "zip_package_manifest",
-    "ann_ivf_topk",
-    # --- unchanged, verified in the previous order's budget window
+    # --- plans changed: every entry that reaches joins.pip_join, and
+    # the n-gram Jaccard prefilter
     "pip_assignment",
     "pip_tile_rollup",
-    "problems_routing",
-    "shapefile_source",
-    "tile_clip_areas",
     "cell_tile_stats",
-    "knn_cellring",
     "streaming_tile_counts",
-    "knn_topk_flat",
-    "dissolve_parents",
-    "poly_export",
-    "zip_package_counts",
-    "first_match",
-    "ann_ivf_probe_topk",
-    "repetition_stats",
-    "lang_quality",
-    "rand_indicators",
-    "problem_url",
-    "ann_lsh_topk",
-    "streaming_dedup",
-    "byte_identity_audit",
+    "ngram_jaccard_pairs",
+    # --- past the budget in the previous order
     "dedup_exact",
     "token_stats",
     "simhash_near_pairs",
@@ -720,6 +670,54 @@ _VERIFY_FIRST = [
     "pricing_summary",
     "rollup_hierarchy",
     "sessionize",
+    # --- rows-only residue: keep their rows fresh every round (their
+    # oracle-backed siblings cover the checkable semantics)
+    "topojson_export",
+    "zip_package_manifest",
+    "ann_ivf_topk",
+    # --- unchanged, in the previous order
+    "simplify_mesh_stats",
+    "dual_export",
+    "residual_holes",
+    "topojson_arc_stats",
+    "multimodal_features",
+    "minhash_band_candidates",
+    "minhash_verified_dups",
+    "set_difference",
+    "snap_to_grid",
+    "string_funcs",
+    "topk",
+    "union_bag",
+    "window_running",
+    "scan_filter_project",
+    "coalesce_upper",
+    "id_prefix",
+    "boundary_predicate",
+    "filler_filter",
+    "anti_join",
+    "semi_join",
+    "unusable_anti_join",
+    "hierarchy_join",
+    "mapping_override",
+    "incremental_manifest",
+    "table_snapshots",
+    "problems_routing",
+    "shapefile_source",
+    "tile_clip_areas",
+    "knn_cellring",
+    "knn_topk_flat",
+    "dissolve_parents",
+    "poly_export",
+    "zip_package_counts",
+    "first_match",
+    "ann_ivf_probe_topk",
+    "repetition_stats",
+    "lang_quality",
+    "rand_indicators",
+    "problem_url",
+    "ann_lsh_topk",
+    "streaming_dedup",
+    "byte_identity_audit",
 ]
 
 

@@ -7,24 +7,31 @@ scan of the fact table with a broadcast prepared index:
 
   pages --ingest (textx.with_ingest_jvm: byte-identity + geotag +
           cell)-->
-        --resolve kernel (_resolve_points): searchsorted cell lookup,
-          FULL cells decide instantly, boundary cells run exact numpy
-          PIP in first-match (insert_order) order--> (osm_id_l0, l1, l2)
+        --broadcast hash join on the COVER_RES cell to the index table
+          (one row per cover cell)-->
+        --one Project: per level, the first boundary candidate whose
+          edges the point's ray crosses an odd number of times, else
+          the FULL winner--> (osm_id_l0, l1, l2)
 
-The build side (admin polygons) is a small dimension: the per-cell
-cover map (FULL winner + ordered boundary candidates per level) and the
-prepared ring arrays ship via sc.broadcast — the Spark-native form of
-the reference's in-process R-tree + prep(geom) dict
-(extract.py:75-77,152-155). Assignment is STATELESS and shuffle-free:
-the 100 TB fact table streams through map tasks only, and the identical
-code path serves Structured Streaming.
+The build side (admin polygons) is a small dimension:
+PreparedBoundaries.index_table() holds, per cover cell, each level's
+FULL winner and its first-match-ordered boundary candidates, every
+candidate cut to the edge band that can cross a ray from a point of
+that cell. It is the Spark-native form of the reference's in-process
+R-tree + prep(geom) dict (extract.py:75-77,152-155). Assignment is
+STATELESS, shuffle-free and Python-free: the 100 TB fact table streams
+through map tasks only, the containment test runs as Spark
+higher-order functions (interpreted, on boundary-cell rows only), and
+the identical code path serves Structured Streaming.
 
 First-match semantics: the reference returns the FIRST R-tree candidate
 that contains the point (exposm/utils.py:43-48), which depends on
 insertion order; we pin that with an explicit insert_order priority
-inside the cover map. One resolver (_build_index + _resolve_points)
-applies that rule both on the driver, where prepare_boundaries finds
-each feature's country and parent, and per Arrow batch in pip_join.
+inside the cover map. One rule (_build_index) orders the candidates
+both for the numpy resolver _resolve_points, which prepare_boundaries
+runs on the driver to find each feature's country and parent, and for
+the index table pip_join broadcasts; pip_join is bit-identical to
+_resolve_points (tested on random and adversarial points).
 """
 
 from __future__ import annotations
@@ -33,6 +40,7 @@ import math
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -90,12 +98,35 @@ class PreparedBoundaries:
         self.cover_pdf = cover_pdf        # cell,osm_id,adminlevel,full,insert_order
         self.n_levels = n_levels          # hierarchy depth (reference: 1..10)
         self._index = None
+        self._table = None
+        self._frame = None                # (session, index DataFrame)
 
     def resolve_index(self):
         """The all-levels first-match index over cover_pdf (built once)."""
         if self._index is None:
             self._index = _build_index(self.cover_pdf, self.n_levels)
         return self._index
+
+    def index_table(self) -> pa.Table:
+        """resolve_index() as the Arrow table pip_join broadcasts (built
+        once): one row per cover cell, `_jc` the cell, `_w<lv>` the FULL
+        winner and `_c<lv>` the first-match-ordered boundary candidates
+        of each level, each cut to the edges that can cross a ray from
+        a point of that cell (_index_table)."""
+        if self._table is None:
+            self._table = _index_table(self.resolve_index(), self.polys_by_id,
+                                       self.n_levels)
+        return self._table
+
+    def index_df(self, spark: SparkSession) -> DataFrame:
+        """index_table() as a DataFrame of `spark`, memoized for that
+        session only: a frame built in a stopped session would fail at
+        execution time. Created from the Arrow table, so it plans as a
+        LocalTableScan; a list of rows would plan as a Python-RDD scan,
+        which starts Python workers on every job."""
+        if self._frame is None or self._frame[0] is not spark:
+            self._frame = (spark, spark.createDataFrame(self.index_table()))
+        return self._frame[1]
 
     def levels_df(self, spark: SparkSession) -> DataFrame:
         return spark.createDataFrame(self.levels_pdf)
@@ -246,6 +277,130 @@ def _resolve_points(lon: np.ndarray, lat: np.ndarray, index, polys,
     return out
 
 
+_EDGE = pa.struct([(k, pa.float64()) for k in ("x1", "y1", "x2", "y2")])
+
+#: edges tested per numpy pass while cutting candidates to their cells
+_EDGE_CHUNK = 1 << 22
+
+
+def _part_edges(polys) -> tuple[np.ndarray, np.ndarray]:
+    """Every ring edge of a MultiPolygon as rows [x1, y1, x2, y2] (the
+    (ring[:-1], ring[1:]) pairs geom.points_in_rings crosses), with the
+    index of the polygon part each belongs to."""
+    edges, part = [np.empty((0, 4))], [np.empty(0, np.int64)]
+    for p, rings in enumerate(polys):
+        for ring in rings:
+            r = np.asarray(ring, dtype=np.float64)
+            edges.append(np.hstack([r[:-1], r[1:]]))
+            part.append(np.full(len(r) - 1, p, dtype=np.int64))
+    return np.concatenate(edges), np.concatenate(part)
+
+
+def _index_table(index, polys, n_levels: int) -> pa.Table:
+    """The first-match index as an Arrow table, one row per cover cell:
+
+      _jc       the cell (int64)
+      _w<lv>    the level-lv FULL winner (string, null if none)
+      _c<lv>    the level-lv boundary candidates in first-match order,
+                array<struct<osm, parts: array<array<edge>>>>, null for
+                a cell without any
+
+    Edge band: a point of cell c crosses an edge with its +x ray only
+    if the edge is not horizontal, its y-range meets the point's row
+    and its max x is right of the point. A candidate keeps just the
+    edges that pass that test for ANY point within one cell of c (the
+    margin absorbs the cell encoder's rounding at grid lines), so the
+    kept set is a superset of the edges any of the cell's points
+    cross: the even-odd parity is unchanged. A part left without edges
+    and a candidate left without parts contain no point of the cell
+    and are dropped. Built with numpy and Arrow offsets, no per-edge
+    Python.
+    """
+    cells_sorted, win, partials = index
+    n = len(cells_sorted)
+    oids = sorted({osm for lists in partials.values()
+                   for cand in lists for _o, osm in cand})
+    oid_pos = {o: k for k, o in enumerate(oids)}
+    per = [_part_edges(polys[o]) for o in oids]
+    edges = np.concatenate([np.empty((0, 4))] + [e for e, _ in per])
+    n_edges = np.array([len(e) for e, _ in per], dtype=np.int64)
+    e_start = np.cumsum(n_edges) - n_edges
+    # part ids made unique across polygons
+    n_parts = np.array([len(polys[o]) for o in oids], dtype=np.int64)
+    e_part = np.concatenate([np.empty(0, np.int64)] + [
+        p + base for (_, p), base in zip(per, np.cumsum(n_parts) - n_parts)])
+
+    # candidate instances (cell row, level, polygon), first-match order
+    row, lvl, oix = [], [], []
+    for cell, lists in partials.items():
+        r = int(np.searchsorted(cells_sorted, cell))
+        for lv, cand in enumerate(lists):
+            for _ord, osm in cand:
+                row.append(r)
+                lvl.append(lv)
+                oix.append(oid_pos[osm])
+    row = np.asarray(row, dtype=np.int64)
+    lvl = np.asarray(lvl, dtype=np.int64)
+    oix = np.asarray(oix, dtype=np.int64)
+    order = np.lexsort((np.arange(len(row)), row, lvl))
+
+    lon0, lat0, _lon1, lat1 = cells.cell_bounds(cells_sorted)
+    w, h = 360.0 / 2 ** COVER_RES, 180.0 / 2 ** COVER_RES
+    osm_names = np.asarray(oids, dtype=object)
+
+    def level_column(sel: np.ndarray) -> pa.Array:
+        ir, io = row[sel], oix[sel]
+        cnt = n_edges[io]
+        # expand every instance to its polygon's edges, chunked so the
+        # temporaries stay bounded, and keep the edge band of its cell
+        kinst, keix = [np.empty(0, np.int64)], [np.empty(0, np.int64)]
+        bounds = np.searchsorted(np.cumsum(cnt),
+                                 np.arange(1, cnt.sum() // _EDGE_CHUNK + 1)
+                                 * _EDGE_CHUNK)
+        for a, b in zip(np.r_[0, bounds], np.r_[bounds, len(ir)]):
+            c = cnt[a:b]
+            inst = np.repeat(np.arange(a, b), c)
+            eix = (np.repeat(e_start[io[a:b]] - (np.cumsum(c) - c), c)
+                   + np.arange(c.sum()))
+            x1, y1, x2, y2 = edges[eix].T
+            r = ir[inst]
+            keep = ((y1 != y2)
+                    & (np.maximum(y1, y2) >= lat0[r] - h)
+                    & (np.minimum(y1, y2) <= lat1[r] + h)
+                    & (np.maximum(x1, x2) >= lon0[r] - w))
+            kinst.append(inst[keep])
+            keix.append(eix[keep])
+        kinst, keix = np.concatenate(kinst), np.concatenate(keix)
+        kpart = e_part[keix]
+        part_at = np.flatnonzero(np.r_[True, (kinst[1:] != kinst[:-1])
+                                       | (kpart[1:] != kpart[:-1])]
+                                 [:len(keix)])
+        p_inst = kinst[part_at]
+        cand_at = np.flatnonzero(np.r_[True, p_inst[1:] != p_inst[:-1]]
+                                 [:len(p_inst)])
+        c_inst = p_inst[cand_at]
+        e = edges[keix]
+        edge_arr = pa.StructArray.from_arrays(
+            [pa.array(e[:, k]) for k in range(4)], fields=list(_EDGE))
+        parts = pa.ListArray.from_arrays(
+            pa.array(np.r_[cand_at, len(part_at)], pa.int32()),
+            pa.ListArray.from_arrays(
+                pa.array(np.r_[part_at, len(keix)], pa.int32()), edge_arr))
+        cand = pa.StructArray.from_arrays(
+            [pa.array(osm_names[io[c_inst]].tolist(), pa.string()), parts],
+            names=["osm", "parts"])
+        per_cell = np.bincount(ir[c_inst], minlength=n)
+        return pa.ListArray.from_arrays(
+            pa.array(np.r_[0, np.cumsum(per_cell)], pa.int32()), cand,
+            mask=pa.array(per_cell == 0))
+
+    cols = {"_jc": pa.array(cells_sorted, pa.int64())}
+    for lv in range(n_levels):
+        cols[f"_w{lv}"] = pa.array(win[lv].tolist(), pa.string())
+        cols[f"_c{lv}"] = level_column(order[lvl[order] == lv])
+    return pa.table(cols)
+
+
 def prepare_boundaries(boundaries_pdf: pd.DataFrame,
                        mapping_pdf: pd.DataFrame,
                        n_levels: int = 3) -> PreparedBoundaries:
@@ -394,33 +549,22 @@ def prepare_boundaries(boundaries_pdf: pd.DataFrame,
 # point-in-polygon join (fact side, fully distributed)
 
 
-def _resolve_schema(n_levels: int) -> T.StructType:
-    return T.StructType([
-        T.StructField(f"osm_id_l{lv}", T.StringType())
-        for lv in range(n_levels)
-    ])
+def _pip_inside(cand):
+    """Even-odd containment of the row's (lon, lat) in one candidate,
+    as a column: geom.points_in_rings' crossing test per edge, summed
+    per polygon part. The division runs only on edges whose y-range
+    spans the point (ANSI mode fails a division by zero), the same
+    guard the numpy kernel applies by masking."""
+    px, py = F.col("lon"), F.col("lat")
 
+    def crossing(acc, e):
+        xint = (e["x2"] - e["x1"]) * (py - e["y1"]) / (e["y2"] - e["y1"]) \
+            + e["x1"]
+        return acc + F.when((e["y1"] > py) != (e["y2"] > py),
+                            F.when(px < xint, 1).otherwise(0)).otherwise(0)
 
-def _resolve_udf(bc_index, bc_polys, n_levels: int = 3):
-    """The whole assignment as one vectorized kernel per Arrow batch
-    (_resolve_points). The coarse cell is computed IN numpy from
-    lon/lat: nullable int64 cells would degrade to float64 across Arrow
-    and lose the high res-tag bits."""
-
-    @pandas_udf(_resolve_schema(n_levels))
-    def resolve(lon: pd.Series, lat: pd.Series) -> pd.DataFrame:
-        out = _resolve_points(
-            lon.to_numpy(dtype=np.float64, na_value=np.nan),
-            lat.to_numpy(dtype=np.float64, na_value=np.nan),
-            bc_index.value, bc_polys.value, n_levels)
-        return pd.DataFrame(
-            {f"osm_id_l{lv}": out[:, lv] for lv in range(n_levels)}
-        )
-
-    # non-deterministic marker (it IS deterministic): prevents Catalyst
-    # from duplicating the kernel into a pushed-down Filter + Project
-    # pair (two ArrowEvalPython nodes = the whole PIP runs twice)
-    return resolve.asNondeterministic()
+    return F.exists(cand["parts"],
+                    lambda p: F.aggregate(p, F.lit(0), crossing) % 2 == 1)
 
 
 def pip_join(points: DataFrame, prepared: PreparedBoundaries,
@@ -430,33 +574,52 @@ def pip_join(points: DataFrame, prepared: PreparedBoundaries,
     points must carry (lon, lat[, cell]). Output: input columns + cell +
     osm_id_l0..l{n_levels-1}.
 
-    Plan shape: MAP-ONLY. The prepared per-cell cover map (FULL winner +
-    boundary candidates per level, SURVEY.md O11) and the prepared ring
-    arrays ship via sc.broadcast — the Spark-native form of the
-    reference's in-process R-tree + prep(geom) dict (extract.py:75-77,
-    152-155) — and one vectorized pandas UDF resolves every level per
-    point. No join, no shuffle, no window: the 100 TB fact table
-    streams through map tasks once, and the operator is stateless, so
-    the SAME code path serves Structured Streaming (streaming.py).
+    Plan shape: one BROADCAST hash join, then one Project, no shuffle
+    and no Python. The build side is prepared.index_df(): one row per
+    cover cell (COVER_RES) with each level's FULL winner and its
+    first-match-ordered boundary candidates, every candidate cut to
+    the edges that can cross a ray from a point of that cell (the
+    edge band, _index_table). The points probe it on
+    cells.cell_column(lon, lat, COVER_RES); the Project then picks, per
+    level, the first candidate whose edges the point's +x ray crosses
+    an odd number of times, else the FULL winner. That is
+    _resolve_points' rule with its arithmetic, so the answer is
+    bit-identical (tested against it). The 100 TB fact table streams
+    through map tasks once, and the operator is stateless, so the SAME
+    code path serves Structured Streaming (streaming.py).
+
+    The containment test uses higher-order functions (exists,
+    aggregate), which are CodegenFallback: the Project runs
+    interpreted, outside whole-stage codegen. That costs little,
+    because only points in boundary cells carry candidate arrays; the
+    scan, cell encode and join stay in one codegen'd stage.
+
+    keep_unmatched=False filters on the join's output with the cheap
+    tests first (any FULL winner, then any containing candidate). A
+    filter on the osm_id columns would be pushed below the Project by
+    Catalyst, running the containment test twice per row.
 
     First-match semantics (first R-tree hit wins, exposm/utils.py:43-48)
     are pinned by insert_order inside the cover map.
     """
-    sc = spark.sparkContext
-    bc_polys = sc.broadcast(prepared.polys_by_id)
-    bc_index = sc.broadcast(prepared.resolve_index())
-
-    lcols = [f"osm_id_l{lv}" for lv in range(prepared.n_levels)]
+    n = prepared.n_levels
     pts = points if "cell" in points.columns else with_cell(points)
-    resolve = _resolve_udf(bc_index, bc_polys, prepared.n_levels)
-    r = pts.withColumn("_r", resolve(F.col("lon"), F.col("lat")))
-    out = r.select("*", *[f"_r.{c}" for c in lcols]).drop("_r")
-    if keep_unmatched:
-        return out
-    matched = F.col(lcols[0]).isNotNull()
-    for c in lcols[1:]:
-        matched = matched | F.col(c).isNotNull()
-    return out.filter(matched)
+    idx = F.broadcast(prepared.index_df(spark))
+    out = pts.join(
+        idx, cells.cell_column(F.col("lon"), F.col("lat"), COVER_RES)
+        == idx["_jc"], "left")
+    if not keep_unmatched:
+        tests = ([F.col(f"_w{lv}").isNotNull() for lv in range(n)]
+                 + [F.exists(f"_c{lv}", _pip_inside) for lv in range(n)])
+        matched = tests[0]
+        for t in tests[1:]:
+            matched = matched | t
+        out = out.filter(matched)
+    return out.select(
+        *[pts[c] for c in pts.columns],
+        *[F.coalesce(F.get(F.filter(f"_c{lv}", _pip_inside), 0)["osm"],
+                     F.col(f"_w{lv}")).alias(f"osm_id_l{lv}")
+          for lv in range(n)])
 
 
 # ---------------------------------------------------------------------------

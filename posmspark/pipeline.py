@@ -156,12 +156,10 @@ def run_pipeline(
         return ing.filter(F.col("text_ok")).drop("text_ok", "html")
 
     def build_assign(df: DataFrame = None) -> DataFrame:
-        # keep_unmatched=False: matched-only fast path (single groupBy, no
-        # anti-join recompute); dropped-row counts are recoverable from the
-        # ingest-vs-assign manifest row counts (lineage accounting)
-        # project to join-relevant columns BEFORE the join: the wide text
-        # column must not ride through the shuffle (column pruning the
-        # planner can't do for us because the UDF output schema hides it)
+        # keep_unmatched=False: matched-only fast path (one filter on the
+        # joined index columns); dropped-row counts are recoverable from
+        # the ingest-vs-assign manifest row counts (lineage accounting).
+        # Only the columns the assign stage writes go into the join.
         pts = (ingest if df is None else df).filter(
             F.col("lat").isNotNull()).select(
             "url", "warc_ts", "lang", "lon", "lat", "cell"

@@ -938,8 +938,14 @@ def q_ngram_jaccard_pairs(spark, sf):
                     F.col("shs").alias("_shs_a"))
     sb = sha.select(F.col("doc_id").alias("doc_b"),
                     F.col("shs").alias("_shs_b"))
+    # size-ratio prefilter before the intersection: J <= min(n_a, n_b)
+    # / max(n_a, n_b), and the kept pairs have round(J, 4) >= 0.8, i.e.
+    # J >= 0.79995. The integer test at 0.79 keeps a margin below that,
+    # so it drops only pairs the Jaccard filter drops too.
+    n_a, n_b = F.size("_shs_a"), F.size("_shs_b")
     return (
         cand.join(sa, "doc_a").join(sb, "doc_b")
+        .filter(100 * F.least(n_a, n_b) >= 79 * F.greatest(n_a, n_b))
         .select(
             "doc_a", "doc_b",
             F.size(F.array_intersect("_shs_a", "_shs_b")).alias("n_inter"),

@@ -12,6 +12,13 @@ The batch and streaming paths share one transformation function
 (transform_pages), so semantics are tested once in batch (the oracle
 suite) and the streaming test only asserts plumbing: schema, watermark,
 output mode, incremental tile updates via foreachBatch.
+
+Every micro-batch runs in the JVM: the ingest is a codegen'd
+expression chain, and the PIP join is a broadcast hash join to the
+prepared index table plus one Project (joins.pip_join), stateless and
+shuffle-free. The index DataFrame is memoized per session, so its
+Arrow table converts once per session; each batch broadcasts it and
+starts no Python worker.
 """
 
 from __future__ import annotations

@@ -788,24 +788,6 @@ def test_owner_set_encoding_injective():
     assert a != b
 
 
-def test_owner_set_spark_oset_id_injective(spark):
-    """Spark twin of the injectivity pin: the same length-prefixed
-    owner-set encoding, built from Spark functions, must distinguish
-    the colliding owner sets."""
-    from pyspark.sql import functions as F
-
-    df = spark.createDataFrame(
-        [("s1", "A"), ("s1", "B"), ("s1", "C"), ("s2", "A"), ("s2", "B|C")],
-        "seg_key string, osm_id string")
-    ids = {r["seg_key"]: r["oid"] for r in (
-        df.distinct().groupBy("seg_key")
-        .agg(F.md5(F.concat_ws("|", F.sort_array(F.collect_set(
-            F.concat_ws(":", F.length("osm_id").cast("string"),
-                        F.col("osm_id"))))))
-            .alias("oid"))).collect()}
-    assert ids["s1"] != ids["s2"]
-
-
 def test_topo_arc_stats_oracle_ties_even_boundary():
     """Exact half-cell quantization ties must round ties-EVEN in both
     engines (np.round == DuckDB CAST AS BIGINT; half-away-from-zero

@@ -3,6 +3,8 @@
 joins broadcast, the PIP assignment is shuffle-free, and aggregations
 use map-side partial aggregation."""
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -14,6 +16,12 @@ SF = "/root/testdata/sf0.001"
 
 def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _shuffles(plan: str) -> int:
+    """Shuffle exchanges in a plan string (a BroadcastExchange is not
+    one)."""
+    return len(re.findall(r"(?<!Broadcast)Exchange", plan))
 
 
 def test_filter_pushdown_reaches_scan(spark):
@@ -40,8 +48,9 @@ def test_dimension_joins_broadcast(spark):
 
 
 def test_pipeline_prejoin_is_shuffle_free(spark):
-    """ingest -> PIP assignment: zero Exchange; the ONLY shuffle in the
-    whole flagship job is the tile aggregation."""
+    """ingest -> PIP assignment: zero shuffle Exchange (the index
+    table's BroadcastExchange is not a shuffle); the ONLY shuffle in
+    the whole flagship job is the tile aggregation."""
     from posmspark.pipeline import default_prepared
     from posmspark.joins import pip_join
 
@@ -52,9 +61,24 @@ def test_pipeline_prejoin_is_shuffle_free(spark):
     pts = ok.filter(F.col("lat").isNotNull()).select(
         "url", "warc_ts", "lang", "lon", "lat", "cell")
     assigned = pip_join(pts, default_prepared(), spark, keep_unmatched=False)
-    assert "Exchange" not in _plan(assigned)
+    assert _shuffles(_plan(assigned)) == 0
     tile_plan = _plan(tiles.cell_admin_tile_stats(assigned))
-    assert tile_plan.count("Exchange") <= 2  # AQE may stage the agg exchange
+    assert _shuffles(tile_plan) <= 2  # AQE may stage the agg exchange
+
+
+def test_flagship_stages_run_no_python(spark):
+    """The flagship (ingest -> cell encode -> broadcast PIP -> tile
+    rollup) runs inside the JVM: no stage's executed plan holds a
+    Python evaluation node or a Python-RDD (ExistingRDD) scan, so a
+    fresh session runs it without starting a Python worker."""
+    from posmspark.pipeline import run_pipeline
+
+    out = run_pipeline(spark, synth.pages_df(spark, 200))
+    assert out["tiles"].count() > 0
+    for stage in ("ingest", "assigned", "tiles"):
+        plan = _plan(out[stage])
+        for node in ("EvalPython", "InPandas", "InArrow", "ExistingRDD"):
+            assert node not in plan, (stage, node, plan[:2000])
 
 
 def test_partial_aggregation_map_side(spark):
@@ -304,10 +328,15 @@ def test_repetition_stats_map_only(spark):
 
 def _max_method_sizes(df) -> list[int]:
     """maxMethodCodeSize of every whole-stage-codegen subtree of df's
-    executed plan (bytecode bytes of its largest generated method)."""
+    executed plan (bytecode bytes of its largest generated method). An
+    adaptive plan (any plan with an exchange) holds its codegen
+    subtrees only once final, so df runs first."""
     debug = df.sparkSession._jvm.org.apache.spark.sql.execution.debug
-    subtrees = debug.package.codegenStringSeq(
-        df._jdf.queryExecution().executedPlan())
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        df.collect()
+        plan = plan.executedPlan()
+    subtrees = debug.package.codegenStringSeq(plan)
     it = subtrees.iterator()
     sizes = []
     while it.hasNext():
@@ -317,8 +346,10 @@ def _max_method_sizes(df) -> list[int]:
 
 def test_cell_encode_stays_jit_compilable(spark):
     """HotSpot never JIT-compiles a method above 8,000 bytecode bytes.
-    The ingest and cell-encode stages run on every fact row, so their
-    generated methods must stay below that, and the ingest must run the
+    The ingest, cell-encode and PIP-join stages run on every fact row,
+    so every codegen subtree of their plans must stay below that (the
+    join's probe stage fuses the ingest, both cell encodes and the
+    hash lookup), and the ingest must run the
     geotag regex once per coordinate, not once per mention in the
     encoder (which copied it into a 44 KB method)."""
     from posmspark import joins, textx
@@ -327,7 +358,12 @@ def test_cell_encode_stays_jit_compilable(spark):
     points = spark.range(100).select(
         (F.col("id") * 3.7 - 180.0).alias("lon"),
         (F.col("id") * 1.9 - 90.0).alias("lat"))
-    for df in (ingest, joins.with_cell(points)):
+    from posmspark.pipeline import default_prepared
+
+    assigned = joins.pip_join(ingest.filter(F.col("lat").isNotNull()),
+                              default_prepared(), spark,
+                              keep_unmatched=False)
+    for df in (ingest, joins.with_cell(points), assigned):
         sizes = _max_method_sizes(df)
         assert sizes and max(sizes) < 8000, sizes
     optimized = ingest._jdf.queryExecution().optimizedPlan().toString()

@@ -12,7 +12,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from posmspark import geom, synth, textx
+from posmspark import cells, geom, joins, synth, textx
 from posmspark.joins import pip_join, prepare_boundaries, with_cell
 
 N_PAGES = 2000
@@ -111,13 +111,17 @@ def test_pip_join_counts_stable_across_parallelism(spark, pages, prepared):
 
 
 def test_pip_join_plan_is_map_only(spark, pages, prepared):
-    """The assignment operator must be shuffle-free: broadcast prepared
-    index + one Arrow UDF, no Exchange anywhere in its plan."""
-    geo = with_cell(textx.with_geocode(pages)).filter(F.col("lat").isNotNull())
+    """The assignment operator must be shuffle-free and Python-free:
+    one broadcast of the prepared index table, no shuffle Exchange and
+    no Python evaluation node anywhere in its plan."""
+    import re
+
+    geo = textx.with_ingest_jvm(pages).filter(F.col("lat").isNotNull())
     out = pip_join(geo, prepared, spark)
     plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan, plan
-    assert "ArrowEvalPython" in plan or "Python" in plan
+    assert not re.search(r"(?<!Broadcast)Exchange", plan), plan
+    assert plan.count("BroadcastExchange") == 1, plan
+    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
 
 
 def test_fused_ingest_matches_reference_kernels(spark, pages):
@@ -212,6 +216,48 @@ def _bsp_rects(x0, y0, x1, y1, rng, depth):
     return [(x0, y0, x1, y1)]
 
 
+def _fuzz_boundaries(seed: int) -> pd.DataFrame:
+    """Random boundary rows: two BSP-split countries at irrational
+    coords, levels 1 and 2 split again, one overlapping duplicate
+    level-1 region per country, shuffled into random input order."""
+    rng = np.random.default_rng(seed)
+    rows, order = [], iter(range(10000))
+    cid = 0
+    for c in range(2):
+        cx = c * 40 + rng.uniform(0, 3) * np.pi
+        cy = rng.uniform(-20, 20)
+        W, H = rng.uniform(8, 14, 2)
+        rows.append(synth._row(f"C{cid}", f"c{c}", f"c{c}", "2", "aa",
+                               "administrative",
+                               [[synth.rect(cx, cy, cx + W, cy + H)]],
+                               next(order)))
+        cid += 1
+        for i, (a, b, x, y) in enumerate(
+                _bsp_rects(cx, cy, cx + W, cy + H, rng, 2)):
+            rows.append(synth._row(f"C{cid}", f"l1-{c}-{i}", None, "4",
+                                   None, "administrative",
+                                   [[synth.rect(a, b, x, y)]],
+                                   next(order)))
+            cid += 1
+            for j, (p, q, r, s) in enumerate(
+                    _bsp_rects(a, b, x, y, rng, 2)):
+                rows.append(synth._row(f"C{cid}", f"l2-{c}-{i}-{j}",
+                                       None, "6", None,
+                                       "administrative",
+                                       [[synth.rect(p, q, r, s)]],
+                                       next(order)))
+                cid += 1
+        aa = cx + rng.uniform(0, W / 2)
+        bb = cy + rng.uniform(0, H / 2)
+        rows.append(synth._row(f"C{cid}", f"dup-{c}", None, "4", None,
+                               "administrative",
+                               [[synth.rect(aa, bb, aa + W / 3,
+                                            bb + H / 3)]], next(order)))
+        cid += 1
+    return pd.DataFrame(rows).sample(
+        frac=1, random_state=seed).reset_index(drop=True)
+
+
 def test_pip_join_random_hierarchy_fuzz(spark):
     """r03 fuzz class: the cover-map + PIP assignment must match the
     first-insert_order-match oracle on RANDOM hierarchies too — BSP
@@ -230,42 +276,7 @@ def test_pip_join_random_hierarchy_fuzz(spark):
         return str(synth.ADMIN_DEFAULTS[key])
 
     for seed in (0, 3):
-        rng = np.random.default_rng(seed)
-        rows, order = [], iter(range(10000))
-        cid = 0
-        for c in range(2):
-            cx = c * 40 + rng.uniform(0, 3) * np.pi
-            cy = rng.uniform(-20, 20)
-            W, H = rng.uniform(8, 14, 2)
-            rows.append(synth._row(f"C{cid}", f"c{c}", f"c{c}", "2", "aa",
-                                   "administrative",
-                                   [[synth.rect(cx, cy, cx + W, cy + H)]],
-                                   next(order)))
-            cid += 1
-            for i, (a, b, x, y) in enumerate(
-                    _bsp_rects(cx, cy, cx + W, cy + H, rng, 2)):
-                rows.append(synth._row(f"C{cid}", f"l1-{c}-{i}", None, "4",
-                                       None, "administrative",
-                                       [[synth.rect(a, b, x, y)]],
-                                       next(order)))
-                cid += 1
-                for j, (p, q, r, s) in enumerate(
-                        _bsp_rects(a, b, x, y, rng, 2)):
-                    rows.append(synth._row(f"C{cid}", f"l2-{c}-{i}-{j}",
-                                           None, "6", None,
-                                           "administrative",
-                                           [[synth.rect(p, q, r, s)]],
-                                           next(order)))
-                    cid += 1
-            aa = cx + rng.uniform(0, W / 2)
-            bb = cy + rng.uniform(0, H / 2)
-            rows.append(synth._row(f"C{cid}", f"dup-{c}", None, "4", None,
-                                   "administrative",
-                                   [[synth.rect(aa, bb, aa + W / 3,
-                                                bb + H / 3)]], next(order)))
-            cid += 1
-        bpdf = pd.DataFrame(rows).sample(
-            frac=1, random_state=seed).reset_index(drop=True)
+        bpdf = _fuzz_boundaries(seed)
         prepared = prepare_boundaries(bpdf, mapping)
 
         prng = np.random.default_rng(seed + 999)
@@ -308,6 +319,61 @@ def test_pip_join_random_hierarchy_fuzz(spark):
             assert country is not None, (seed, r.osm_id)
             assert raw_level[r.osm_id] == tag_for(country, r.adminlevel), (
                 seed, r.osm_id)
+
+
+def _parity_points(prepared, seed: int, n: int = 200_000) -> np.ndarray:
+    """(lon, lat) rows: n seeded uniform points over the boundaries'
+    bbox plus one degree, then the adversarial set: every ring vertex,
+    every edge midpoint, the corners and edge midpoints of every cover
+    cell, and NaN, +-180 and +-90 coordinates."""
+    rings = [r for polys in prepared.polys_by_id.values()
+             for rs in polys for r in rs]
+    verts = np.vstack(rings)
+    (x0, y0), (x1, y1) = verts.min(axis=0) - 1, verts.max(axis=0) + 1
+    rng = np.random.default_rng(seed)
+    uniform = np.c_[rng.uniform(x0, x1, n), rng.uniform(y0, y1, n)]
+    mids = np.vstack([(r[:-1] + r[1:]) / 2 for r in rings])
+    c0, r0, c1, r1 = cells.cell_bounds(prepared.resolve_index()[0])
+    cx, cy = (c0 + c1) / 2, (r0 + r1) / 2
+    cell_pts = np.vstack([np.c_[a, b] for a in (c0, c1) for b in (r0, r1)]
+                         + [np.c_[cx, r0], np.c_[cx, r1],
+                            np.c_[c0, cy], np.c_[c1, cy]])
+    odd = [(np.nan, 1.0), (1.0, np.nan), (np.nan, np.nan)] + [
+        (x, y) for x in (-180.0, 0.0, 180.0) for y in (-90.0, 0.0, 90.0)]
+    return np.vstack([uniform, verts, mids, cell_pts, np.array(odd)])
+
+
+@pytest.mark.parametrize("boundaries", ["default", "fuzz0", "fuzz3"])
+def test_pip_join_bit_identical_to_resolve_points(spark, boundaries):
+    """The JVM join and Project must give _resolve_points' answer on
+    every level of every point: 200k seeded uniform points plus the
+    adversarial set (_parity_points), on the pipeline's prepared
+    boundaries and on both fuzz hierarchies. A point on a ring vertex
+    or edge, or on a cell's side, is where a dropped edge or a changed
+    rounding would show."""
+    from posmspark.pipeline import default_prepared
+
+    if boundaries == "default":
+        prepared = default_prepared()
+    else:
+        prepared = prepare_boundaries(_fuzz_boundaries(int(boundaries[4:])),
+                                      synth.gen_admin_mapping_pdf())
+    xy = _parity_points(prepared, seed=17)
+    n = prepared.n_levels
+    exp = joins._resolve_points(xy[:, 0], xy[:, 1], prepared.resolve_index(),
+                                prepared.polys_by_id, n)
+    pdf = pd.DataFrame({"i": np.arange(len(xy)), "lon": xy[:, 0],
+                        "lat": xy[:, 1]})
+    for lv in range(n):
+        pdf[f"exp{lv}"] = pd.Series(exp[:, lv], dtype=object)
+    got = pip_join(spark.createDataFrame(pdf), prepared, spark)
+    differs = ~F.col("osm_id_l0").eqNullSafe(F.col("exp0"))
+    for lv in range(1, n):
+        differs = differs | ~F.col(f"osm_id_l{lv}").eqNullSafe(
+            F.col(f"exp{lv}"))
+    bad = got.filter(differs).limit(5).collect()
+    assert not bad, bad
+    assert sum(x is not None for x in exp[:, 0]) > 1000  # not vacuous
 
 
 def test_ingest_kernels_agree_on_adversarial_html(spark):
