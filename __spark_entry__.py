@@ -638,20 +638,45 @@ _SPATIAL_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
 
 #: Driver-budget ordering (VERDICT r02 item 1): the driver verifies
 #: registry entries IN ORDER with a ~50-query budget. Rotation: the
-#: entries whose plans changed come FIRST (the PIP join now runs as a
-#: broadcast hash join + one Project inside the JVM, and the n-gram
-#: Jaccard pairs gained a size-ratio prefilter); then the entries the
+#: entries whose plans changed come FIRST (the PIP join and the cell
+#: encoder are now built from SQL text: every entry that reaches
+#: joins.pip_join, and the two kNN entries, which reach
+#: cells.cell_column through joins.knn_cellring); then the entries the
 #: previous order left past the budget; then the rows-only residue; the
 #: rest keep their previous relative order in the tail.
 _VERIFY_FIRST = [
-    # --- plans changed: every entry that reaches joins.pip_join, and
-    # the n-gram Jaccard prefilter
+    # --- plans changed: every entry that reaches joins.pip_join or
+    # joins.knn_cellring
     "pip_assignment",
     "pip_tile_rollup",
     "cell_tile_stats",
     "streaming_tile_counts",
-    "ngram_jaccard_pairs",
+    "knn_cellring",
+    "knn_topk_flat",
     # --- past the budget in the previous order
+    "table_snapshots",
+    "problems_routing",
+    "shapefile_source",
+    "tile_clip_areas",
+    "dissolve_parents",
+    "poly_export",
+    "zip_package_counts",
+    "first_match",
+    "ann_ivf_probe_topk",
+    "repetition_stats",
+    "lang_quality",
+    "rand_indicators",
+    "problem_url",
+    "ann_lsh_topk",
+    "streaming_dedup",
+    "byte_identity_audit",
+    # --- rows-only residue: keep their rows fresh every round (their
+    # oracle-backed siblings cover the checkable semantics)
+    "topojson_export",
+    "zip_package_manifest",
+    "ann_ivf_topk",
+    # --- unchanged, in the previous order
+    "ngram_jaccard_pairs",
     "dedup_exact",
     "token_stats",
     "simhash_near_pairs",
@@ -670,12 +695,6 @@ _VERIFY_FIRST = [
     "pricing_summary",
     "rollup_hierarchy",
     "sessionize",
-    # --- rows-only residue: keep their rows fresh every round (their
-    # oracle-backed siblings cover the checkable semantics)
-    "topojson_export",
-    "zip_package_manifest",
-    "ann_ivf_topk",
-    # --- unchanged, in the previous order
     "simplify_mesh_stats",
     "dual_export",
     "residual_holes",
@@ -700,24 +719,6 @@ _VERIFY_FIRST = [
     "hierarchy_join",
     "mapping_override",
     "incremental_manifest",
-    "table_snapshots",
-    "problems_routing",
-    "shapefile_source",
-    "tile_clip_areas",
-    "knn_cellring",
-    "knn_topk_flat",
-    "dissolve_parents",
-    "poly_export",
-    "zip_package_counts",
-    "first_match",
-    "ann_ivf_probe_topk",
-    "repetition_stats",
-    "lang_quality",
-    "rand_indicators",
-    "problem_url",
-    "ann_lsh_topk",
-    "streaming_dedup",
-    "byte_identity_audit",
 ]
 
 

@@ -68,12 +68,10 @@ COVER_RES = 10
 
 def with_cell(df: DataFrame, lon_col: str = "lon", lat_col: str = "lat",
               out_col: str = "cell") -> DataFrame:
-    """Cell encode via the pure-JVM expression cells.cell_column
-    (codegen'd; cell_udf is the Arrow/numpy equivalent, kept as the
-    reference kernel for parity tests)."""
-    return df.withColumn(
-        out_col, cells.cell_column(F.col(lon_col), F.col(lat_col))
-    )
+    """Cell encode via the pure-JVM expression cells.cell_column, SQL
+    text parsed in one call (codegen'd; cell_udf is the Arrow/numpy
+    equivalent, kept as the reference kernel for parity tests)."""
+    return df.withColumn(out_col, cells.cell_column(lon_col, lat_col))
 
 
 # ---------------------------------------------------------------------------
@@ -549,22 +547,16 @@ def prepare_boundaries(boundaries_pdf: pd.DataFrame,
 # point-in-polygon join (fact side, fully distributed)
 
 
-def _pip_inside(cand):
-    """Even-odd containment of the row's (lon, lat) in one candidate,
-    as a column: geom.points_in_rings' crossing test per edge, summed
-    per polygon part. The division runs only on edges whose y-range
-    spans the point (ANSI mode fails a division by zero), the same
-    guard the numpy kernel applies by masking."""
-    px, py = F.col("lon"), F.col("lat")
-
-    def crossing(acc, e):
-        xint = (e["x2"] - e["x1"]) * (py - e["y1"]) / (e["y2"] - e["y1"]) \
-            + e["x1"]
-        return acc + F.when((e["y1"] > py) != (e["y2"] > py),
-                            F.when(px < xint, 1).otherwise(0)).otherwise(0)
-
-    return F.exists(cand["parts"],
-                    lambda p: F.aggregate(p, F.lit(0), crossing) % 2 == 1)
+# Even-odd containment of the row's (lon, lat) in the candidate `_cand`:
+# geom.points_in_rings' crossing test per edge, summed per polygon part.
+# The nested CASE runs the division only on edges whose y-range spans
+# the point (ANSI mode fails a division by zero), the same guard the
+# numpy kernel applies by masking; the operand order is the kernel's.
+_PIP_INSIDE = (
+    "exists(_cand.parts, _part -> aggregate(_part, 0, (_acc, _e) -> _acc"
+    " + CASE WHEN (_e.y1 > lat) <> (_e.y2 > lat) THEN CASE WHEN lon <"
+    " (_e.x2 - _e.x1) * (lat - _e.y1) / (_e.y2 - _e.y1) + _e.x1"
+    " THEN 1 ELSE 0 END ELSE 0 END) % 2 = 1)")
 
 
 def pip_join(points: DataFrame, prepared: PreparedBoundaries,
@@ -580,13 +572,18 @@ def pip_join(points: DataFrame, prepared: PreparedBoundaries,
     first-match-ordered boundary candidates, every candidate cut to
     the edges that can cross a ray from a point of that cell (the
     edge band, _index_table). The points probe it on
-    cells.cell_column(lon, lat, COVER_RES); the Project then picks, per
-    level, the first candidate whose edges the point's +x ray crosses
-    an odd number of times, else the FULL winner. That is
+    cells.cell_column("lon", "lat", COVER_RES); the Project then picks,
+    per level, the first candidate whose edges the point's +x ray
+    crosses an odd number of times, else the FULL winner. That is
     _resolve_points' rule with its arithmetic, so the answer is
     bit-identical (tested against it). The 100 TB fact table streams
     through map tasks once, and the operator is stateless, so the SAME
     code path serves Structured Streaming (streaming.py).
+
+    The filter and the per-level picks are SQL text (_PIP_INSIDE), one
+    JVM parse per expression. Composed from PySpark Column lambdas,
+    every operator is a py4j round trip: the same plan took about
+    4,500 of them, 0.7 s of driver time per build before any job ran.
 
     The containment test uses higher-order functions (exists,
     aggregate), which are CodegenFallback: the Project runs
@@ -602,24 +599,19 @@ def pip_join(points: DataFrame, prepared: PreparedBoundaries,
     First-match semantics (first R-tree hit wins, exposm/utils.py:43-48)
     are pinned by insert_order inside the cover map.
     """
-    n = prepared.n_levels
+    levels = range(prepared.n_levels)
     pts = points if "cell" in points.columns else with_cell(points)
     idx = F.broadcast(prepared.index_df(spark))
-    out = pts.join(
-        idx, cells.cell_column(F.col("lon"), F.col("lat"), COVER_RES)
-        == idx["_jc"], "left")
+    out = pts.join(idx, cells.cell_column("lon", "lat", COVER_RES)
+                   == idx["_jc"], "left")
     if not keep_unmatched:
-        tests = ([F.col(f"_w{lv}").isNotNull() for lv in range(n)]
-                 + [F.exists(f"_c{lv}", _pip_inside) for lv in range(n)])
-        matched = tests[0]
-        for t in tests[1:]:
-            matched = matched | t
-        out = out.filter(matched)
-    return out.select(
-        *[pts[c] for c in pts.columns],
-        *[F.coalesce(F.get(F.filter(f"_c{lv}", _pip_inside), 0)["osm"],
-                     F.col(f"_w{lv}")).alias(f"osm_id_l{lv}")
-          for lv in range(n)])
+        out = out.filter(" OR ".join(
+            [f"_w{lv} IS NOT NULL" for lv in levels]
+            + [f"exists(_c{lv}, _cand -> {_PIP_INSIDE})" for lv in levels]))
+    return out.selectExpr(
+        *[f"`{c}`" for c in pts.columns],
+        *[f"coalesce(get(filter(_c{lv}, _cand -> {_PIP_INSIDE}), 0).osm,"
+          f" _w{lv}) AS osm_id_l{lv}" for lv in levels])
 
 
 # ---------------------------------------------------------------------------
@@ -702,7 +694,7 @@ def knn_cellring(points: DataFrame, sites_pdf: pd.DataFrame, k: int,
     scell = cells.encode(slon, slat, res)
 
     pts = points.select(point_key, "lon", "lat").withColumn(
-        "qcell", cells.cell_column(F.col("lon"), F.col("lat"), res)
+        "qcell", cells.cell_column("lon", "lat", res)
     ).filter(F.col("qcell").isNotNull())
 
     # Cell dimensions (degrees/meters) for the termination guarantee.

@@ -4,7 +4,7 @@ re-expressed as one lazy DataFrame DAG cut into checkpointed stages
 
   stage 1 ingest : pages -> byte-identity-verified text -> geocode -> cell
   stage 2 assign : broadcast PIP join -> (url, cell, osm_id_l0/l1/l2)
-  stage 3 tiles  : raster<->vector tile stats + admin rollup
+  stage 3 tiles  : raster<->vector tile stats per (cell, admin area)
 
 The reference runs three full scans of the input and a chain of PL/pgSQL
 procedures; here the fact table is scanned once, everything else is
@@ -204,12 +204,10 @@ def run_pipeline(
             spark, "tiles", input_fingerprint,
             os.path.join(workdir, "stage_tiles"), build_tiles, force)
 
-    rollup = tiles.admin_rollup(assigned)
     return {
         "ingest": ingest,
         "assigned": assigned,
         "tiles": tile_stats,
-        "rollup": rollup,
         "prepared": prepared,
     }
 

@@ -158,7 +158,7 @@ def with_ingest_jvm(df, html_col: str = "html", text_col: str = "text"):
     parsed = df.select("*", ok.alias("text_ok"), num(1).alias("lat"),
                        num(2).alias("lon"))
     return parsed.select(
-        "*", cells.cell_column(F.col("lon"), F.col("lat")).alias("cell"))
+        "*", cells.cell_column("lon", "lat").alias("cell"))
 
 
 def with_extracted_text(df, html_col: str = "html", out_col: str = "text_extracted"):

@@ -344,17 +344,23 @@ def _max_method_sizes(df) -> list[int]:
     return sizes
 
 
-def test_cell_encode_stays_jit_compilable(spark):
+def test_cell_encode_stays_jit_compilable(spark, tmp_path):
     """HotSpot never JIT-compiles a method above 8,000 bytecode bytes.
     The ingest, cell-encode and PIP-join stages run on every fact row,
     so every codegen subtree of their plans must stay below that (the
     join's probe stage fuses the ingest, both cell encodes and the
     hash lookup), and the ingest must run the
     geotag regex once per coordinate, not once per mention in the
-    encoder (which copied it into a 44 KB method)."""
+    encoder (which copied it into a 44 KB method). The checkpointed
+    ingest stage runs over a parquet scan of the pages, filtered on
+    text_ok: that plan is checked too."""
     from posmspark import joins, textx
 
-    ingest = textx.with_ingest_jvm(synth.pages_df(spark, 100))
+    pages = synth.pages_df(spark, 100)
+    ingest = textx.with_ingest_jvm(pages)
+    pages.write.parquet(str(tmp_path / "pages"))
+    staged = (textx.with_ingest_jvm(spark.read.parquet(str(tmp_path / "pages")))
+              .filter("text_ok").drop("text_ok", "html"))
     points = spark.range(100).select(
         (F.col("id") * 3.7 - 180.0).alias("lon"),
         (F.col("id") * 1.9 - 90.0).alias("lat"))
@@ -363,8 +369,60 @@ def test_cell_encode_stays_jit_compilable(spark):
     assigned = joins.pip_join(ingest.filter(F.col("lat").isNotNull()),
                               default_prepared(), spark,
                               keep_unmatched=False)
-    for df in (ingest, joins.with_cell(points), assigned):
+    for df in (ingest, staged, joins.with_cell(points), assigned):
         sizes = _max_method_sizes(df)
         assert sizes and max(sizes) < 8000, sizes
     optimized = ingest._jdf.queryExecution().optimizedPlan().toString()
     assert optimized.count("regexp_extract(") == 2, optimized[:2000]
+
+
+def test_pip_join_builds_in_few_py4j_calls(spark, monkeypatch):
+    """Building a plan costs one py4j round trip per PySpark Column
+    operator. pip_join and the ingest encoder are built from SQL text,
+    one JVM parse per expression: pip_join takes a few dozen round
+    trips (it took about 4,500 as Column lambdas, 0.7 s of driver time
+    per build). Only the build is counted; nothing runs. py4j's
+    finalizer thread frees dead Java references through the same
+    method (memory commands, `m`); those depend on garbage collection
+    elsewhere and are not counted."""
+    import threading
+
+    import py4j.clientserver
+    from py4j import protocol
+
+    from posmspark import joins, textx
+    from posmspark.pipeline import default_prepared
+
+    prepared = default_prepared()
+    prepared.index_df(spark)   # memoized per session: build it outside
+    points = spark.range(10).selectExpr("CAST(id AS STRING) AS url",
+                                        "id * 1.5D AS lon", "id * 0.5D AS lat")
+    pages = synth.pages_df(spark, 10)
+    sent = [0]
+    send = py4j.clientserver.ClientServerConnection.send_command
+    builder = threading.get_ident()
+
+    def counting(self, command, *args, **kwargs):
+        if (threading.get_ident() == builder
+                and not command.startswith(protocol.MEMORY_COMMAND_NAME)):
+            sent[0] += 1
+        return send(self, command, *args, **kwargs)
+
+    monkeypatch.setattr(py4j.clientserver.ClientServerConnection,
+                        "send_command", counting)
+
+    def commands(build):
+        sent[0] = 0
+        build()
+        return sent[0]
+
+    counts = {
+        "pip_join": commands(lambda: joins.pip_join(
+            points, prepared, spark, keep_unmatched=False)),
+        "pip_join_keep_unmatched": commands(lambda: joins.pip_join(
+            points, prepared, spark, keep_unmatched=True)),
+        "with_ingest_jvm": commands(lambda: textx.with_ingest_jvm(pages)),
+    }
+    assert counts["pip_join"] < 150, counts
+    assert counts["pip_join_keep_unmatched"] < 150, counts
+    assert counts["with_ingest_jvm"] < 300, counts

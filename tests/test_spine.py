@@ -152,7 +152,7 @@ def test_jvm_cell_encoder_matches_numpy(spark, pages):
 
     geo = textx.with_geocode(pages).filter(F.col("lat").isNotNull())
     both = geo.select(
-        cells.cell_column(F.col("lon"), F.col("lat")).alias("jvm"),
+        cells.cell_column("lon", "lat").alias("jvm"),
         cell_udf(F.col("lon"), F.col("lat")).alias("py"),
     )
     assert both.filter(~F.col("jvm").eqNullSafe(F.col("py"))).count() == 0
@@ -169,7 +169,7 @@ def test_jvm_cell_encoder_matches_numpy(spark, pages):
     for res in (8, 10, 12):
         got = edge.select(
             "lon", "lat",
-            cells.cell_column(F.col("lon"), F.col("lat"), res).alias("cell"),
+            cells.cell_column("lon", "lat", res).alias("cell"),
             cell_udf_at(res)(F.col("lon"), F.col("lat")).alias("py"),
         ).collect()
         assert len(got) == len(pairs)
